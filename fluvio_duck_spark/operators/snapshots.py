@@ -49,7 +49,15 @@ from fluvio_duck_spark.functions.checksum import (
     CHECKSUM_MODULUS,
     row_checksum,
 )
+from fluvio_duck_spark.operators.groupwrite import (
+    publish,
+    write_file_per_group,
+)
 from fluvio_duck_spark.operators.merge import merge_upsert
+from fluvio_duck_spark.operators.skipping import (
+    bloom_admits,
+    bloom_hash_cols,
+)
 
 _MANIFEST_DIR = "_manifests"
 _HEAD = "_HEAD"
@@ -151,22 +159,15 @@ def plan_as_of_pruned(
     necessarily recorded both bits and covers the range.  Returns
     ``(paths, files_planned, files_total)``; a table committed without
     ``stats_col`` degrades to the full file list."""
-    from fluvio_duck_spark.operators.skipping import bloom_positions
-
     m = load_manifest(root, version)
     files = m["files"]
     if m.get("stats_col") is None:
         return [e["path"] for e in files], len(files), len(files)
-    h1, h2 = bloom_positions(int(key))
-
-    def admits(e: dict) -> bool:
-        def bit(h: int) -> bool:
-            w = e["w0"] if h < 63 else e["w1"]
-            return (w >> (h % 63)) & 1 == 1
-
-        return e["smin"] <= key <= e["smax"] and bit(h1) and bit(h2)
-
-    hit = [e["path"] for e in files if admits(e)]
+    hit = [
+        e["path"] for e in files
+        if e["smin"] <= key <= e["smax"]
+        and bloom_admits(e["w0"], e["w1"], int(key))
+    ]
     return hit, len(hit), len(files)
 
 
@@ -194,7 +195,6 @@ def read_as_of_pruned(
 
 
 def _write_generation(
-    spark: SparkSession,
     df: DataFrame,
     root: str,
     version: int,
@@ -206,27 +206,24 @@ def _write_generation(
     """Write ``df`` one physical file per partition value into this
     version's generation directory and return the manifest entries.
 
-    FUSED write+stats (VERDICT r13 "Next round" #3): every commit used
-    to pay TWO jobs — Spark's parquet write, then a read-back scan of
-    the fresh files for the per-file stats (rows + checksum fold, plus
-    — when the table declares a ``stats_col`` — min/max and the 126-bit
-    bloom word pair).  The per-row pieces of every stat (the md5-fold
-    checksum term, the two bloom hash positions) are plain column
-    expressions, so they are projected BEFORE the partition exchange
-    and the group reductions (exact integer sums / min / max / bit-or)
-    run next to the file write itself: ``groupBy(__pt).applyInArrow``
-    writes each partition value's single file via pyarrow (native
-    columnar writer, guide §4.2) and RETURNS its manifest stats row —
-    one job, one shuffle, one pass over the generation, zero read-back.
-    ``order_by`` clusters rows within each written file (the OPTIMIZE
-    ZORDER path) via an in-group arrow sort on the projected key.
+    The per-row pieces of every stat (the md5-fold checksum term and,
+    when the table declares a ``stats_col``, the two bloom hash
+    positions) are plain column expressions projected BEFORE the
+    partition exchange; each partition value's group then writes its
+    single file via pyarrow and returns its manifest stats row (rows +
+    checksum fold, plus min/max and the 126-bit bloom word pair) —
+    one job, one shuffle, zero read-back
+    (:func:`~fluvio_duck_spark.operators.groupwrite.write_file_per_group`).
+    Tasks write hidden attempt files; the driver publishes exactly the
+    ones the collected stats rows name (``groupwrite.publish``), so the
+    manifest describes the bytes on disk under task retries and
+    speculation.  ``order_by`` clusters rows within each written file
+    (the OPTIMIZE ZORDER path) via an in-group arrow sort on the
+    projected key, NULL keys first like an ascending Spark sort.
 
-    Memory bound: a group (one partition value) materializes as one
-    Arrow table in the Python worker — bounded by the one-file-per-
-    partition-value contract itself (a value too big for worker memory
-    would be too big for a single data file anyway).  The exact-sum
-    chunking below keeps the checksum fold overflow-free for any file
-    under ~2.3e9 rows per 2^30-row slice (row fold ≤ 3.9e9)."""
+    The exact-sum chunking below keeps the checksum fold overflow-free
+    for any file under ~2.3e9 rows per 2^30-row slice (row fold ≤
+    3.9e9)."""
     gen_dir = os.path.join(root, "data", f"gen{version}")
     if os.path.exists(gen_dir):
         # parity with the former write.mode("errorifexists")
@@ -237,8 +234,6 @@ def _write_generation(
     staged = staged.withColumn("__ck", row_checksum(audit_cols))
     has_stats = stats_col is not None
     if has_stats:
-        from fluvio_duck_spark.operators.skipping import bloom_hash_cols
-
         h1, h2 = bloom_hash_cols(F.col(stats_col).cast("long"))
         staged = (
             staged.withColumn("__sk", F.col(stats_col).cast("long"))
@@ -254,17 +249,19 @@ def _write_generation(
         out_schema += ", smin long, smax long, w0 long, w1 long"
     mod = CHECKSUM_MODULUS
 
-    def _write_one(tbl):
+    def _write_one(tbl, write):
+        import hashlib
+
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         pv_raw = tbl.column(_PT)[0].as_py()
         # mirror Hive's null-partition sentinel (the old writer's
         # behavior via Spark's partitionBy)
         pv = "__HIVE_DEFAULT_PARTITION__" if pv_raw is None else pv_raw
         if sort_in_group:
-            tbl = tbl.sort_by([("__ord", "ascending")])
+            tbl = tbl.sort_by(
+                [("__ord", "ascending")], null_placement="at_start"
+            )
         rows = tbl.num_rows
         # exact checksum fold: per-row folds ≤ 3.9e9, so 2^30-row slices
         # sum below 2^63 in int64; the Python-int accumulator is exact
@@ -275,83 +272,53 @@ def _write_generation(
             fold += int(
                 np.add.reduce(ck[i : i + (1 << 30)], dtype=np.int64)
             )
-        fold %= mod
-        extra = {}
-        if has_stats:
-            # nulls mirror the engine aggregates: min/max skip them,
-            # a null hash contributes no bloom bit (when→otherwise 0)
-            sk = tbl.column("__sk").drop_null().to_numpy(
-                zero_copy_only=False
-            )
-            extra["smin"] = int(sk.min()) if sk.size else None
-            extra["smax"] = int(sk.max()) if sk.size else None
-            w0 = 0
-            w1 = 0
-            for hname in ("__h1", "__h2"):
-                h = (
-                    tbl.column(hname)
-                    .drop_null()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                lo = h[h < 63]
-                hi = h[h >= 63]
-                if lo.size:
-                    w0 |= int(np.bitwise_or.reduce(np.int64(1) << lo))
-                if hi.size:
-                    w1 |= int(np.bitwise_or.reduce(np.int64(1) << (hi - 63)))
-            extra["w0"] = w0
-            extra["w1"] = w1
         # %XX-escape the partition value for the directory name (quote
         # escapes a superset of Hive's set — injective, and decoded the
         # same way); the manifest records the LOGICAL value so
         # merge_into's touched-partition compare and CDF's set algebra
-        # line up (ADVICE r12)
+        # line up (ADVICE r12).  File BASENAMES must be globally unique
+        # and %-escape-free (_per_file_version_audits keys its
+        # file→version map on the basename): an md5 of the partition
+        # value gives both.
         leaf = os.path.join(
             gen_dir, f"{_PT}={urllib.parse.quote(pv, safe='')}"
         )
-        os.makedirs(leaf, exist_ok=True)
-        # file BASENAMES must be globally unique and %-escape-free
-        # (_per_file_version_audits keys its file→version map on the
-        # basename) yet deterministic (a retried task must rewrite the
-        # same path, keeping the write idempotent): an md5 of the
-        # partition value gives all three
-        import hashlib
-
         tag = hashlib.md5(pv.encode("utf-8")).hexdigest()[:16]
-        path = os.path.join(leaf, f"part-00000-gen{version}-{tag}.parquet")
-        tmp = f"{path}.{os.getpid()}.tmp"
-        pq.write_table(tbl.select(data_cols), tmp)
-        os.replace(tmp, path)  # atomic: a retried task rewrites in place
-        row = {"partition": pv, "path": path, "rows": rows, "fold": fold}
-        row.update(extra)
-        fields = [("partition", pa.string()), ("path", pa.string())] + [
-            (k, pa.int64()) for k in row if k not in ("partition", "path")
-        ]
-        # explicit arrow schema: a [None] cell would otherwise infer the
-        # null type and fail Spark's output-schema validation
-        return pa.table(
-            {k: [row[k]] for k, _t in fields}, schema=pa.schema(fields)
+        path = write(
+            os.path.join(leaf, f"part-00000-gen{version}-{tag}.parquet"),
+            tbl.select(data_cols),
         )
+        row = {
+            "partition": [pv], "path": [path], "rows": [rows],
+            "fold": [fold % mod],
+        }
+        if has_stats:
+            # imported here: a module-level reference would make every
+            # Python worker import the package, stats or not
+            from fluvio_duck_spark.operators.skipping import bloom_words
 
-    # explicit partition count BEFORE the groupBy: the grouped exchange
-    # is byte-tiny and AQE would coalesce it to a handful of tasks,
-    # serializing the per-leaf file writes (measured at sf1: 313 leaves
-    # written by 7 coalesced tasks).  A keyed repartition with an
-    # explicit N is exempt from AQE coalescing and the groupBy reuses
-    # its partitioning (guide §2.4), so leaf writes stay parallel —
-    # the same adjudication as r13 #6, carried into the fused form.
-    staged = staged.repartition(
-        spark.sparkContext.defaultParallelism, F.col(_PT)
-    )
-    stats = staged.groupBy(_PT).applyInArrow(_write_one, out_schema).collect()
+            # nulls mirror the engine aggregates: min/max skip them
+            sk = tbl.column("__sk").drop_null().to_numpy(
+                zero_copy_only=False
+            )
+            w0, w1 = bloom_words(tbl.column("__h1"), tbl.column("__h2"))
+            row.update(
+                smin=[int(sk.min()) if sk.size else None],
+                smax=[int(sk.max()) if sk.size else None],
+                w0=[w0],
+                w1=[w1],
+            )
+        return row
+
+    stats = write_file_per_group(staged, _PT, _write_one, out_schema).collect()
+    final = publish(gen_dir, [r["path"] for r in stats])
     # an empty frame is a legal write (e.g. a MERGE whose change feed
     # deletes every row of its touched partitions): no groups, no
     # leaves, an empty manifest entry list (ADVICE r12)
     out = []
-    for r in sorted(stats, key=lambda r: r["path"]):
+    for r in sorted(stats, key=lambda r: final[r["path"]]):
         e = {
-            "path": r["path"],
+            "path": final[r["path"]],
             "partition": r["partition"],
             "rows": r["rows"],
             "fold": r["fold"],
@@ -444,7 +411,7 @@ def create_table(
     consulted by :func:`plan_as_of_pruned`."""
     os.makedirs(root, exist_ok=True)
     files = _write_generation(
-        spark, df, root, 1, partition_col, audit_cols, stats_col
+        df, root, 1, partition_col, audit_cols, stats_col
     )
     return _commit(
         root, 1, "create", None, files, partition_col, audit_cols, stats_col,
@@ -480,7 +447,7 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     v = head + 1
     schema = _declared_schema(m, df)
     new = _write_generation(
-        spark, df, root, v, m["partition_col"], m["audit_cols"],
+        df, root, v, m["partition_col"], m["audit_cols"],
         m.get("stats_col"),
     )
     return _commit(
@@ -610,7 +577,7 @@ def merge_into(
     merged = merge_upsert(base, changes, key, op_col, set_cols)
     schema = _declared_schema(m, merged)
     new = _write_generation(
-        spark, merged, root, v, pt, m["audit_cols"], m.get("stats_col")
+        merged, root, v, pt, m["audit_cols"], m.get("stats_col")
     )
     return _commit(
         root, v, "merge", head, carried + new, pt, m["audit_cols"],
@@ -635,7 +602,7 @@ def _rewrite_commit(
     v = head + 1
     df = read_version_as_of(spark, root, head)
     new = _write_generation(
-        spark, df, root, v, m["partition_col"], m["audit_cols"],
+        df, root, v, m["partition_col"], m["audit_cols"],
         m.get("stats_col"), order_by,
     )
     old_rows, old_fold = manifest_audit(root, head)

@@ -671,7 +671,8 @@ def test_table_schema_cache_detects_in_place_rewrite(spark, tmp_path):
     """VERDICT r13 #3: for a DIRECTORY table, rewriting one file in place
     (same top-level entry set) does not bump the directory mtime, so a
     (path, dir-mtime) cache key would pin the stale schema for the rest
-    of the session.  The key must also track the max child mtime."""
+    of the session.  The key must track (count, max mtime) over every
+    descendant file, nested partition leaves included."""
     import os
 
     import pyarrow as pa
@@ -704,3 +705,28 @@ def test_table_schema_cache_detects_in_place_rewrite(spark, tmp_path):
 
     new = table_schema(spark, str(tbl_dir))
     assert [fld.name for fld in new.fields] == ["a", "b"]
+
+    # the same in-place rewrite one directory level down (a partitioned
+    # table): neither the table dir nor its top-level child moves
+    nested_dir = tmp_path / "n.parquet"
+    leaf = nested_dir / "pt=0"
+    leaf.mkdir(parents=True)
+    g = str(leaf / "part-000.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), g)
+    old = table_schema(spark, str(nested_dir))
+    assert [fld.name for fld in old.fields] == ["a", "pt"]
+    dir_mtimes = {d: os.path.getmtime(d) for d in (nested_dir, leaf)}
+    pq.write_table(
+        pa.table(
+            {
+                "a": pa.array([1, 2], pa.int64()),
+                "c": pa.array([1.5, 2.5], pa.float64()),
+            }
+        ),
+        g,
+    )
+    os.utime(g, (dir_mtimes[leaf] + 2, dir_mtimes[leaf] + 2))
+    for d, t in dir_mtimes.items():
+        os.utime(d, (t, t))
+    new = table_schema(spark, str(nested_dir))
+    assert [fld.name for fld in new.fields] == ["a", "c", "pt"]

@@ -791,7 +791,8 @@ def test_snapshot_optimize_zorder_clusters_and_preserves(spark, tmp_path):
     partition, prior versions' files stay byte-stable (mtime), the
     audit pair is preserved, rows inside every rewritten file are
     sorted by the Morton key, and manifest stats keep pruning correctly
-    on the optimized version."""
+    on the optimized version.  A NULL order key clusters first, as an
+    ascending Spark sort places it."""
     import os
 
     from fluvio_duck_spark.operators import snapshots as snap
@@ -804,6 +805,10 @@ def test_snapshot_optimize_zorder_clusters_and_preserves(spark, tmp_path):
         F.pmod(F.col("id") * 11, F.lit(64)).alias("b"),
         F.pmod(F.col("id"), F.lit(2)).alias("pt"),
     )
+    null_key = spark.createDataFrame(
+        [(5000, None, 3, 0)], "k long, a long, b long, pt long"
+    )
+    df = df.unionByName(null_key)
     cols = ["k", "a", "b", "pt"]
     snap.create_table(spark, root, df, "pt", cols, stats_col="k")
     appended = df.select(
@@ -843,7 +848,12 @@ def test_snapshot_optimize_zorder_clusters_and_preserves(spark, tmp_path):
     for r in rows:
         by_file.setdefault(r["__file"], []).append(r["__zk"])
     assert len(by_file) == 2
+    nulls = [f for f, zks in by_file.items() if None in zks]
+    assert len(nulls) == 1 and by_file[nulls[0]][0] is None, (
+        "NULL order key must be the first row of its file"
+    )
     for f, zks in by_file.items():
+        zks = [z for z in zks if z is not None]
         assert zks == sorted(zks), f"file not Morton-clustered: {f}"
 
     # stats survive the rewrite: pruning at v3 still finds the key
