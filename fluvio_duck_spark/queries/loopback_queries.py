@@ -100,7 +100,10 @@ def _q_loopback_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side windowed range read from the server, and the drain
     must reproduce the batch truth per partition (shares
     stream_pp_datasource_parity's oracle)."""
+    import os
+
     from fluvio_duck_spark.sources.loopback import server_parts
+    from fluvio_duck_spark.streaming.consume_stream import run_stream_to_table
 
     with _server(spark, sf_dir) as addr:
         # granule scaled to the largest partition's RPC-probed LEO so
@@ -120,29 +123,12 @@ def _q_loopback_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("offset").alias("max_offset"),
             (F.max("offset") + 1).alias("leo"),
         )
-        # drain via processAllAvailable (the stream_pp_* pattern): the
-        # Python source's availableNow fallback pays a ~7 s termination
-        # lag on its first use per session — same drain-to-LEO
-        # semantics without it.  State partitions sized from the served
-        # log's on-disk bytes (the events table the server reads).
-        import os as _os
-
-        from fluvio_duck_spark.streaming.consume_stream import drain_scope
-
-        with drain_scope(
-            spark, (_os.path.join(sf_dir, "events.parquet"),)
-        ):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("__loopback_stream_parity")
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return spark.table("__loopback_stream_parity")
+        # state partitions sized from the served log's on-disk bytes
+        # (the events table the server reads)
+        return run_stream_to_table(
+            agg, spark, "complete",
+            drain_paths=(os.path.join(sf_dir, "events.parquet"),),
+        )
 
 
 def _q_loopback_transform_tail(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,6 @@
-"""Streaming-mode queries (SURVEY §2.11) run to bounded completion via
-``Trigger.AvailableNow`` + memory sink, so the driver's batch correctness
+"""Streaming-mode queries (SURVEY §2.11) run to bounded completion by
+``streaming.consume_stream.drain`` (``Trigger.AvailableNow``) into a memory
+sink or a ``foreachBatch`` function, so the driver's batch correctness
 harness can hash-compare them against ANSI oracles.
 
 Each entry exercises a *streaming* plan — file-stream source, watermarks,
@@ -21,7 +22,7 @@ from fluvio_duck_spark.queries.pipeline import ORACLE_CDC as ORACLE_STREAM_CDC
 from fluvio_duck_spark.queries.relational import ORACLE_OHLC as ORACLE_STREAM_OHLC
 from fluvio_duck_spark.sources.consume import fluvio_consume
 from fluvio_duck_spark.streaming.consume_stream import (
-    drain_scope,
+    drain,
     event_stream,
     fluvio_consume_stream,
     record_log_stream,
@@ -578,11 +579,11 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(changes.schema).format("parquet")
         .option("maxFilesPerTrigger", "1").load(work + "/feed/b*")
     )
-    with drain_scope(spark, (work + "/feed",)):
-        return run_stream_cdc(
-            spark, snapshot, stream, "user_id", "ts", "op", ["value"],
-            state_dir=work + "/state", tiebreak_col="event_id",
-        )
+    return run_stream_cdc(
+        spark, snapshot, stream, "user_id", "ts", "op", ["value"],
+        state_dir=work + "/state", tiebreak_col="event_id",
+        drain_paths=(work + "/feed",),
+    )
 
 
 QUERIES.update({
@@ -642,18 +643,7 @@ def q_stream_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("offset").alias("min_offset"),
         F.max("offset").alias("max_offset"),
     )
-    with drain_scope(spark, _events_paths(sf_dir)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("__ds_stream_parity")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table("__ds_stream_parity")
+    return run_stream_to_table(agg, spark, "complete", drain_paths=_events_paths(sf_dir))
 
 
 ORACLE_STREAM_DATASOURCE = """
@@ -831,19 +821,13 @@ def q_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["f"] = _sweep(local, "p_retailprice", "p_size")
 
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "part")):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            # fresh checkpoint per invocation: a reused location would mark
-            # the files committed and deliver ZERO batches on a re-run
-            .option(
-                "checkpointLocation",
-                _run_dir("skyline", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream.writeStream.foreachBatch(apply_batch)
+        # fresh checkpoint per invocation: a reused location would mark
+        # the files committed and deliver ZERO batches on a re-run
+        .option("checkpointLocation", _run_dir("skyline", "ckpt")),
+        spark, _tbl_paths(sf_dir, "part"),
+    )
     return spark.createDataFrame(
         state["f"], "p_partkey long, p_retailprice double, p_size int"
     )
@@ -1016,17 +1000,11 @@ def q_stream_er_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("dirty_name", "clean_name", "jaccard")
         out.write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "part")):
-        q = (
-            dirty_stream.writeStream.foreachBatch(match_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("er_gate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        dirty_stream.writeStream.foreachBatch(match_batch)
+        .option("checkpointLocation", _run_dir("er_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "part"),
+    )
     out_schema = "dirty_name string, clean_name string, jaccard double"
     if not os.path.isdir(out_dir):  # stream had zero batches
         return spark.createDataFrame([], out_schema)
@@ -1084,18 +1062,12 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def score_batch(batch_df, _bid) -> None:
         dsir_score(batch_df, lam).write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(score_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("dsir_gate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(score_batch)
+        .option("checkpointLocation", _run_dir("dsir_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, n_grams int, dsir_logweight double"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame([], out_schema)
@@ -1149,18 +1121,12 @@ def q_stream_neardup_gate_portable(spark: SparkSession, sf_dir: str) -> DataFram
         )
         hits.write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("ndgate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("ndgate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, n_partners int"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame([], out_schema)
@@ -1217,18 +1183,12 @@ def q_stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         scored.write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(score_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("dsir_sel", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(score_batch)
+        .option("checkpointLocation", _run_dir("dsir_sel", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = (
         "doc_id long, n_grams int, dsir_logweight double, "
         "source string, n_tok int"
@@ -1300,18 +1260,12 @@ def q_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_dir
         )
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("decon_gate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("decon_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, n_shared_grams long"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame([], out_schema)
@@ -1410,15 +1364,12 @@ def q_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append").parquet(out_dir)
         )
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _run_dir("bloom_gate", "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("bloom_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, flagged int"
     if not os.path.isdir(out_dir):
         gated = spark.createDataFrame([], out_schema)
@@ -1530,18 +1481,12 @@ def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         scored.write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("clf_gate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("clf_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, source string, logit_ppm long"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame(
@@ -1623,18 +1568,12 @@ def q_stream_novelty_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         scored.write.mode("append").parquet(out_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("novelty_gate", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("novelty_gate", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, n_shingles int, n_novel int, novelty double"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame([], out_schema)
@@ -1710,18 +1649,12 @@ def q_stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_hits.write.mode("append").parquet(out_dir)
         same_batch.write.mode("append").parquet(idx_dir)  # index grows
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                _run_dir("ndinc", "ckpt"),
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", _run_dir("ndinc", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     out_schema = "doc_id long, other long"
     if not os.path.isdir(out_dir):
         return spark.createDataFrame([], "doc_id long, n_prior_dups int")
@@ -1798,15 +1731,12 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         new_state.write.mode("overwrite").parquet(state_dir)
 
-    with drain_scope(spark, _events_paths(sf_dir)):
-        q = (
-            event_stream(spark, sf_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _run_dir("kmvstream", "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        event_stream(spark, sf_dir)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", _run_dir("kmvstream", "ckpt")),
+        spark, _events_paths(sf_dir),
+    )
 
     state = spark.read.schema(st_schema).parquet(state_dir)
     w = W.partitionBy("event_type").orderBy("h")
@@ -1892,18 +1822,7 @@ def q_stream_pp_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         F.max("offset").alias("max_offset"),
         (F.max("offset") + 1).alias("leo"),
     )
-    with drain_scope(spark, (log_dir,)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("__pp_stream_parity")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table("__pp_stream_parity")
+    return run_stream_to_table(agg, spark, "complete", drain_paths=(log_dir,))
 
 
 ORACLE_STREAM_PP_DATASOURCE = """
@@ -1959,18 +1878,7 @@ def q_stream_pp_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n"),
         )
     )
-    with drain_scope(spark, (log_dir,)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("__pp_stream_windows")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table("__pp_stream_windows")
+    return run_stream_to_table(agg, spark, "complete", drain_paths=(log_dir,))
 
 
 ORACLE_STREAM_PP_WINDOWS = """
@@ -2093,15 +2001,12 @@ def q_stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)  # sever lineage before overwrite
         new_state.write.mode("overwrite").parquet(state_dir)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _run_dir("reservoir", "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", _run_dir("reservoir", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
     return spark.read.schema(st_schema).parquet(state_dir).select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -2165,15 +2070,12 @@ def q_stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             snap.create_table(s, root, df, "pt", cols)
 
-    with drain_scope(spark, _tbl_paths(sf_dir, "documents")):
-        q = (
-            document_stream(spark, sf_dir)
-            .writeStream.foreachBatch(commit_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _run_dir("snapshot_commits", "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        document_stream(spark, sf_dir)
+        .writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", _run_dir("snapshot_commits", "ckpt")),
+        spark, _tbl_paths(sf_dir, "documents"),
+    )
 
     head = snap.current_version(root)
     consistent = True

@@ -554,8 +554,9 @@ class FluvioStreamReader(DataSourceStreamReader):
     under-drain; bounded-drain parity instead comes from uncapped LEO +
     granule-sized tasks.)  ``throttle_rows_per_trigger`` DOES cap the
     per-trigger cursor advance — for processing-time triggers and
-    cursor-protocol tests only; documented availableNow-unsafe for the
-    same snapshot reason.  Restart-safe: the driver-memory cursor
+    cursor-protocol tests only; unsafe under ``Trigger.AvailableNow``
+    (every bounded ``drain``) for the same snapshot reason.
+    Restart-safe: the driver-memory cursor
     re-learns the committed position from the first planned range
     (``partitions``' start IS the checkpoint offset) and floors later
     plans at it, so a kill/restart never re-plans already-delivered

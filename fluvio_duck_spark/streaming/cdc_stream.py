@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from fluvio_duck_spark.operators.events import cdc_apply
+from fluvio_duck_spark.streaming.consume_stream import drain
 
 
 def run_stream_cdc(
@@ -44,6 +45,7 @@ def run_stream_cdc(
     val_cols: list[str],
     state_dir: str,
     tiebreak_col: str | None = None,
+    drain_paths=(),
 ) -> DataFrame:
     """Maintain a CDC-merged state table from a streaming change feed.
     Processes everything available (``Trigger.AvailableNow``), then
@@ -53,7 +55,8 @@ def run_stream_cdc(
     Restartable: if ``state_dir`` already holds state versions, the run
     RESUMES from the latest one (the snapshot argument is ignored) and
     the streaming checkpoint skips already-processed feed files — stop
-    the job anywhere, call again, converge to the same state."""
+    the job anywhere, call again, converge to the same state.
+    ``drain_paths`` is passed to :func:`drain`."""
     import re
 
     existing = sorted(
@@ -91,11 +94,10 @@ def run_stream_cdc(
         current["path"] = nxt
         current["version"] += 1
 
-    (
+    drain(
         change_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint")),
+        spark,
+        drain_paths,
     )
     return spark.read.parquet(current["path"])

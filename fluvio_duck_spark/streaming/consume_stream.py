@@ -30,6 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from fluvio_duck_spark.mappings import projection
 from fluvio_duck_spark.options import ConsumeOptError, ConsumeOptions, parse_consume_opts
@@ -172,70 +173,65 @@ def drain_state_partitions(spark: SparkSession, paths) -> int:
     return max(1, -(-_input_bytes(paths) // advisory))
 
 
-class drain_scope:
-    """Context manager pinning ``spark.sql.shuffle.partitions`` to the
-    input-derived count for the duration of one bounded drain, restoring
-    the session value afterwards.  Safe because the streaming harnesses
-    are sequential by contract (see ``_run_dir``'s single-invocation
-    note); the conf is captured by the stream at first-batch planning,
-    inside the scope."""
+def drain(
+    writer: DataStreamWriter, spark: SparkSession, paths=()
+) -> StreamingQuery:
+    """The one bounded-drain runner: start a configured stream writer
+    with ``Trigger.AvailableNow`` (process everything currently in the
+    source, then stop — the reference's default consume mode), wait for
+    it to finish and return the terminated query (``recentProgress``
+    holds its per-batch record).
 
-    def __init__(self, spark: SparkSession, paths) -> None:
-        self.spark = spark
-        self.n = drain_state_partitions(spark, paths)
-
-    def __enter__(self) -> "drain_scope":
-        self._old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self._old)
+    ``paths`` (source files/dirs) opts the drain into the input-derived
+    state-partition count (:func:`drain_state_partitions`).  The count is
+    set on the session only across ``writer.start()``: the stream clones
+    the session conf when it starts and plans every batch from the clone,
+    so the drain keeps the count after the session value is restored,
+    while jobs a ``foreachBatch`` function builds from ``spark`` plan
+    under the session's own setting."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    if paths:
+        spark.conf.set(key, str(drain_state_partitions(spark, paths)))
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, session_value)
+    q.awaitTermination()
+    return q
 
 
 def run_stream_to_table(
     df: DataFrame,
     spark: SparkSession,
     output_mode: str = "append",
-    name: str | None = None,
-    drain_paths=None,
+    drain_paths=(),
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion with Trigger.AvailableNow
-    semantics into a memory sink; returns the materialized batch result.
+    """Drain a streaming DataFrame into a memory sink and return the
+    materialized batch result.
 
     This is the bounded-parity runner (reference default mode: consume
     everything available, then stop); it is also what lets streaming
-    pipelines participate in the batch correctness harness.
+    pipelines participate in the batch correctness harness.  The sink's
+    temp view is dropped once the result is bound, so repeated drains
+    do not pin every earlier result for the life of the session.
 
     ``drain_paths`` (source files/dirs) opts the drain into the
-    input-derived state-partition count (:func:`drain_state_partitions`)
-    instead of the session's core-tracking default."""
-    name = name or f"stream_out_{uuid.uuid4().hex[:12]}"
-
-    def _run() -> None:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if drain_paths:
-        with drain_scope(spark, drain_paths):
-            _run()
-    else:
-        _run()
-    return spark.table(name)
+    input-derived state-partition count (:func:`drain_state_partitions`),
+    pinned on the session only across the stream's start (see
+    :func:`drain`)."""
+    name = f"stream_out_{uuid.uuid4().hex[:12]}"
+    drain(
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+        spark,
+        drain_paths,
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
-def run_stream_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-) -> None:
+def run_stream_to_parquet(df: DataFrame, path: str, checkpoint: str) -> None:
     """foreachBatch → parquet sink (SURVEY §7 step 7): each micro-batch is
     written by the distributed batch writer, with the checkpoint making the
     pipeline restartable (exactly-once per batch id — a retried batch
@@ -249,11 +245,9 @@ def run_stream_to_parquet(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(path)
 
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        df.writeStream.foreachBatch(write_batch).option(
+            "checkpointLocation", checkpoint
+        ),
+        df.sparkSession,
     )
-    q.awaitTermination()

@@ -53,6 +53,7 @@ def main() -> None:
     )
     from fluvio_duck_spark.sources.metadata import fluvio_partitions
     from fluvio_duck_spark.sources.pplog import write_pp_log_dir
+    from fluvio_duck_spark.streaming.consume_stream import run_stream_to_table
 
     spark = get_spark("fluvio-duck-loopback-demo", shuffle_partitions=4)
     register_fluvio_source(spark)
@@ -107,16 +108,15 @@ def main() -> None:
         drained = {}
         for tag, opts in (("local", ("log_dir", log_dir)),
                           ("server", ("server", srv.address))):
-            q = (spark.readStream.format("fluvio")
-                 .option(*opts).option("max_rows_per_batch", "200").load()
-                 .groupBy("partition").agg(F.count("*").alias("n"),
-                                           (F.max("offset") + 1).alias("leo"))
-                 .writeStream.format("memory").queryName(f"drain_{tag}")
-                 .outputMode("complete").start())
-            q.processAllAvailable()
-            q.stop()
-            drained[tag] = rows(spark.table(f"drain_{tag}"))
-        spark.table("drain_server").show()
+            df = run_stream_to_table(
+                spark.readStream.format("fluvio")
+                .option(*opts).option("max_rows_per_batch", "200").load()
+                .groupBy("partition").agg(F.count("*").alias("n"),
+                                          (F.max("offset") + 1).alias("leo")),
+                spark, "complete",
+            )
+            drained[tag] = rows(df)
+        df.show()  # the server drain
         assert drained["local"] == drained["server"]
         print("4. streaming drain to LEO: local == server\n")
 

@@ -6,9 +6,9 @@ the stream_tumbling_windows shape) N times and reports where the wall
 time goes:
 
 * construct     — building the streaming DataFrame (driver only)
-* start         — writeStream.start() returning (query thread launch,
-                  checkpoint dir creation, source init)
-* drain         — awaitTermination() (micro-batch execution)
+* drain         — ``drain()``: writeStream.start() (query thread launch,
+                  checkpoint dir creation, source init) plus the
+                  micro-batch execution up to termination
 * read          — spark.table() of the memory sink
 * per-batch durationMs breakdown from StreamingQueryProgress
   (addBatch / getBatch / latestOffset / queryPlanning / walCommit /
@@ -33,7 +33,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     from bench import prep_bench_data
     from fluvio_duck_spark.session import get_spark
-    from fluvio_duck_spark.streaming.consume_stream import record_log_stream
+    from fluvio_duck_spark.streaming.consume_stream import (
+        drain,
+        record_log_stream,
+    )
     from fluvio_duck_spark.streaming.windows import tumbling_window_agg
 
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
@@ -47,28 +50,15 @@ def main() -> None:
         t_construct = time.perf_counter() - t0
 
         name = f"prof_stream_{rep}"
-        scope = None
-        if os.environ.get("PROFILE_DRAIN_SCOPE"):
-            from fluvio_duck_spark.streaming.consume_stream import drain_scope
-
-            scope = drain_scope(
-                spark, (os.path.join(bench_dir, "events.parquet"),)
-            )
-            scope.__enter__()
         t0 = time.perf_counter()
-        q = (
+        q = drain(
             agg.writeStream.outputMode("complete")
             .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+            .queryName(name),
+            spark,
+            (os.path.join(bench_dir, "events.parquet"),),
         )
-        t_start = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        q.awaitTermination()
         t_drain = time.perf_counter() - t0
-        if scope is not None:
-            scope.__exit__()
         t0 = time.perf_counter()
         spark.table(name).write.format("noop").mode("overwrite").save()
         t_read = time.perf_counter() - t0
@@ -102,11 +92,10 @@ def main() -> None:
                 {
                     "rep": rep,
                     "construct": round(t_construct, 3),
-                    "start": round(t_start, 3),
                     "drain": round(t_drain, 3),
                     "read": round(t_read, 3),
                     "total": round(
-                        t_construct + t_start + t_drain + t_read, 3
+                        t_construct + t_drain + t_read, 3
                     ),
                     "batches": batches,
                 },

@@ -142,6 +142,81 @@ def test_foreach_batch_parquet_sink_parity(spark, sf_dir, tmp_path):
     assert streamed == batch
 
 
+def test_run_stream_to_table_drops_its_sink_view(spark, sf_dir):
+    """Each drain's memory-sink view is dropped once its result is bound:
+    repeated drains leave no ``stream_out_*`` view holding their rows
+    for the life of the session, and the bound results still read."""
+    outs = [
+        run_stream_to_table(record_log_stream(spark, sf_dir), spark)
+        for _ in range(2)
+    ]
+    views = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("stream_out_")
+    ]
+    assert views == []
+    assert [o.count() for o in outs] == [1000, 1000]
+
+
+@pytest.fixture
+def session_partitions(spark):
+    """The session's shuffle-partition count, set to 4 for one test (above
+    the 1 an sf0.001 drain derives; earlier tests may leave it changed)."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    yield "4"
+    spark.conf.set(key, old)
+
+
+def test_drain_sizes_state_partitions_from_input(spark, sf_dir, session_partitions):
+    """A stateful drain given ``paths`` runs with the input-derived
+    state-partition count, not the session's, and leaves the session
+    value as it found it."""
+    import os
+
+    from fluvio_duck_spark.streaming.consume_stream import (
+        drain,
+        drain_state_partitions,
+    )
+
+    paths = (os.path.join(sf_dir, "events.parquet"),)
+    agg = record_log_stream(spark, sf_dir).groupBy("partition").count()
+    q = drain(
+        agg.writeStream.outputMode("complete").format("memory")
+        .queryName("drain_state_pin"),
+        spark, paths,
+    )
+    spark.catalog.dropTempView("drain_state_pin")
+    want = drain_state_partitions(spark, paths)
+    assert want == 1
+    assert q.lastProgress["stateOperators"][0]["numStateStoreInstances"] == want
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_partitions
+
+
+def test_drain_foreach_batch_jobs_see_session_conf(
+    spark, sf_dir, tmp_path, session_partitions
+):
+    """The state-partition pin spans only the stream's start: jobs a
+    ``foreachBatch`` function builds from the parent session plan under
+    the session's own ``spark.sql.shuffle.partitions``."""
+    import os
+
+    from fluvio_duck_spark.streaming.consume_stream import drain
+
+    seen = []
+
+    def record(batch, _bid) -> None:
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    drain(
+        record_log_stream(spark, sf_dir).writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        spark, (os.path.join(sf_dir, "events.parquet"),),
+    )
+    assert seen and set(seen) == {session_partitions}
+
+
 def test_stream_dedup_matches_batch_distinct(spark, sf_dir):
     from pyspark.sql import functions as F
 
