@@ -42,6 +42,35 @@ def plan_ops(df: DataFrame) -> Counter:
     return ops
 
 
+#: Expressions that parse the whole JSON payload each time they run, by
+#: SQL name → Catalyst class.
+_JSON_PARSERS = {"from_json": "JsonToStructs", "get_json_object": "GetJsonObject"}
+
+
+def json_parses(df: DataFrame) -> Counter:
+    """JSON-parsing expression → occurrences in the plan, i.e. how often
+    each record that reaches them is parsed.  A batch frame is read from
+    its physical plan (under AQE the input plan, which running the query
+    leaves as it is, where the query stages' JSON repeats their plans); a
+    streaming frame has no physical plan until it starts, so its
+    optimized logical plan is read.  The plan is read as JSON, where every expression node names
+    its class: the text renderings elide expressions (TakeOrderedAndProject
+    prints only its output) and truncate long argument lists."""
+    qe = df._jdf.queryExecution()
+    if df.isStreaming:
+        optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+        plan = optimizer.execute(qe.analyzed())
+    else:
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()
+    text = plan.toJSON()
+    return Counter({
+        name: text.count(f'"class":"org.apache.spark.sql.catalyst.expressions.{cls}"')
+        for name, cls in _JSON_PARSERS.items()
+    })
+
+
 def scan_selected_partitions(df: DataFrame) -> tuple[int, str]:
     """(number of Hive-style partition directories the file scan will
     actually read, partition-filter text) for a single-scan plan.

@@ -2291,7 +2291,7 @@ def q_source_mapped_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     top as JVM expressions.  Benched in bench.py's extended block so a
     regression in the DataSource's partition planning shows up in the
     2x perf gate, not only in correctness."""
-    from fluvio_duck_spark.mappings import mapped_columns
+    from fluvio_duck_spark.mappings import project
     from fluvio_duck_spark.sources.datasource import register_fluvio_source
 
     register_fluvio_source(spark)
@@ -2303,7 +2303,7 @@ def q_source_mapped_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     cols = [("k:i", "k"), ("ks", "k"), ("kd:d", "k"), ("kf:f", "k"), ("kl:l", "k")]
-    return df.select(*mapped_columns(cols, F.col("value")))
+    return project(df, cols)
 
 
 ORACLE_SOURCE_MAPPED_TYPED = """

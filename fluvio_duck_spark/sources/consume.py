@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fluvio_duck_spark.mappings import projection
+from fluvio_duck_spark.mappings import project
 from fluvio_duck_spark.options import ConsumeOptions, parse_consume_opts
 from fluvio_duck_spark.transforms import apply_transform_chain, load_transform_chain
 
@@ -236,7 +236,7 @@ def fluvio_consume(
         log = apply_transform_chain(log, chain)
         if opts.rows is not None:
             log = _pp_row_budget(log, opts.rows)
-        return log.select(projection(opts.columns))
+        return project(log, opts.columns)
 
     # Row budget (--rows, reference src/consume.rs:75-93). Two plans:
     #  (a) offset-range predicate — when the selection is the dense whole
@@ -283,5 +283,6 @@ def fluvio_consume(
         log = apply_transform_chain(log, chain)
         if opts.rows is not None:
             log = log.orderBy(*_budget_order_cols(log)).limit(opts.rows)
+            return project(log, opts.columns, parse_once=False)
 
-    return log.select(projection(opts.columns))
+    return project(log, opts.columns)

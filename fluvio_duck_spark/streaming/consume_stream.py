@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from fluvio_duck_spark.mappings import projection
+from fluvio_duck_spark.mappings import project
 from fluvio_duck_spark.options import ConsumeOptError, ConsumeOptions, parse_consume_opts
 from fluvio_duck_spark.sources.consume import DEFAULT_SF_DIR, STANDIN_PARTITIONS
 from fluvio_duck_spark.transforms import apply_transform_chain, load_transform_chain
@@ -125,7 +125,7 @@ def fluvio_consume_stream(
         log = log.filter(F.col("offset") <= opts.end)
 
     log = apply_transform_chain(log, load_transform_chain(opts))
-    return log.select(projection(opts.columns))
+    return project(log, opts.columns)
 
 
 def _input_bytes(paths) -> int:

@@ -16,8 +16,10 @@ Supported:
   (SURVEY §7 "genuinely hard bits"): ``shift`` with a nested input-path tree
   whose string leaves name output keys, and ``default`` for top-level
   missing-key fills.  The record's ``value`` is rewritten to the shifted
-  JSON object, all inside Catalyst expressions (``get_json_object`` +
-  ``to_json(struct(...))``) — no per-record Python.
+  JSON object, all inside Catalyst expressions — no per-record Python:
+  each op parses its input once (``mappings.extract_paths``: one pruned
+  ``from_json``, or ``get_json_object`` for a single path) and writes
+  ``to_json(struct(...))``.
 * built-in modules covering fluvio's five standard SmartModule kinds:
   ``sql-filter`` (filter), ``sql-map`` / jolt (map), ``sql-filter-map``
   (filter-map: rewrite-or-drop in one pass), ``sql-array-map``
@@ -43,6 +45,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fluvio_duck_spark.mappings import extract_paths
 from fluvio_duck_spark.options import ConsumeOptions
 
 TransformFn = Callable[..., DataFrame]
@@ -94,32 +97,28 @@ def jolt_transform(df: DataFrame, params: dict) -> DataFrame:
     if not isinstance(spec, list):
         raise TransformError("jolt `spec` must be a list of operations")
 
-    value = F.col("value")
     for op in spec:
         kind = op.get("operation")
         op_spec = op.get("spec", {})
         if kind == "shift":
-            pairs = _jolt_leaves(op_spec)
-            value = F.to_json(
-                F.struct(
-                    *[
-                        F.get_json_object(value, "$." + in_path).alias(out_name)
-                        for in_path, out_name in pairs
-                    ]
-                )
-            )
+            parsed, fields = extract_paths(df, [
+                ("$." + in_path, out_name, None)
+                for in_path, out_name in _jolt_leaves(op_spec)
+            ])
+            value = F.to_json(F.struct(*fields))
         elif kind == "default":
             # top-level fills: keep existing value for key, else the default
-            fields = [
-                F.coalesce(
-                    F.get_json_object(value, "$." + key), F.lit(json.dumps(default))
-                ).alias(key)
-                for key, default in op_spec.items()
-            ]
-            value = F.to_json(F.struct(*fields))
+            parsed, raws = extract_paths(
+                df, [("$." + key, None, None) for key in op_spec]
+            )
+            value = F.to_json(F.struct(*[
+                F.coalesce(raw, F.lit(json.dumps(default))).alias(key)
+                for raw, (key, default) in zip(raws, op_spec.items())
+            ]))
         else:
             raise TransformError(f"unsupported jolt operation: {kind!r}")
-    return df.withColumn("value", value)
+        df = parsed.withColumn("value", value)
+    return df
 
 
 def sql_filter_transform(df: DataFrame, params: dict) -> DataFrame:

@@ -11,6 +11,10 @@ per-query plan-shape tests guard individually:
 - ``ArrowEvalPython`` / ``MapInPandas`` etc. — Arrow-batched Python passes,
   listed so the count is visible (each should have a documented reason)
 
+and recording ``json_parses``: the ``from_json`` + ``get_json_object``
+expressions in the executed plan, i.e. how often each record's payload
+is parsed (``plans.json_parses``).
+
 Writes ``plan_census.json`` at the repo root and prints a summary.
 Queries that execute work eagerly inside their builder (streaming gates,
 iterative fits) still yield a final DataFrame whose plan is censused.
@@ -34,7 +38,7 @@ PY_OPS = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas",
 
 
 def main() -> None:
-    from fluvio_duck_spark.plans import bnlj_audit, plan_ops
+    from fluvio_duck_spark.plans import bnlj_audit, json_parses, plan_ops
     from fluvio_duck_spark.queries import all_queries
     from fluvio_duck_spark.session import get_spark
 
@@ -54,6 +58,7 @@ def main() -> None:
             "smj": ops.get("SortMergeJoin", 0),
             "bhj": ops.get("BroadcastHashJoin", 0),
             "py_arrow": sum(ops.get(o, 0) for o in PY_OPS),
+            "json_parses": sum(json_parses(df).values()),
             "flags": {o: ops[o] for o in FLAG_OPS if ops.get(o, 0) > 0},
             # Result-schema receipt for the driver-hashability gate
             # (VERDICT r6 #7): the r02 agg_exact_percentiles red was the
@@ -92,6 +97,8 @@ def main() -> None:
         print(f"  {n}: {f}{note}")
     total_py = sum(r["py_arrow"] for r in census.values())
     print(f"arrow-python passes across registry: {total_py}")
+    parsing = sum(1 for r in census.values() if r["json_parses"])
+    print(f"queries parsing JSON payloads: {parsing}")
     unproven = {n for n, r in census.items()
                 if any(not a["ok"] for a in r.get("bnlj_audit", []))}
     print(f"BNLJ unproven-bound queries ({len(unproven)}): {sorted(unproven)}")

@@ -111,6 +111,130 @@ def test_rfc3339_timestamp_mapping(spark):
     assert got[1].time is None  # parse failure → NULL (§1.4.6)
 
 
+#: Payloads on which the one-parse and per-path forms must agree.
+_AGREEING_PAYLOADS = [
+    '{"a": {"b": {"x": [1, {"y": "z"}]}, "c": [1, 2]}, "e": {"f": 1}}',
+    '{"a": {"b": 1E3, "c": 60.1710}, "e": -0.0}',
+    '{"a": {"b": 007, "c": 2}, "e": 1}',
+    '{"a": {"b": 12345678901234567890, "c": 1.5e-7}, "e": -12.0}',
+    '{"a": {"b": "\\u00e9\\u4e2d\\n\\"q\\"", "c": true}, "e": false}',
+    '{"a": {"b": null, "c": null}, "e": null}',
+    '{"a": {"c": "2"}}',
+    '{"a": 5, "e": "x"}',
+    '{"a": "str", "e": "x"}',
+    '{"a": [{"b": 1}], "e": "x"}',
+    '[{"a": {"b": 1}, "e": 2}]',
+    '{"a": {"b": 1, "c": 2}, "e":',
+    '{"a": {"b": 1',
+    "not json",
+    "",
+    None,
+    '  {"a" : {"b" : " sp ", "c" : {}} , "e" : [ ] }  ',
+    '{"A": {"b": 1}, "e": "2"}',
+]
+#: Duplicate keys: the one-parse form keeps the last value.
+_DUPLICATE_KEYS = '{"e": "1", "e": "2", "a": {"b": 1, "b": 3}}'
+#: Non-numeric number tokens: the per-path form NULLs every path; the
+#: one-parse form can keep the fields parsed before the token.
+_NON_NUMERIC = [
+    '{"e": 1, "a": {"b": 2, "c": Infinity}}',
+    '{"e": 1, "n": NaN, "a": {"b": 2, "c": 3}}',
+]
+
+#: (name[:code], path) mappings over the battery: nested and top-level
+#: paths, a `$.` prefix, one path read twice under two types.
+_BATTERY_MAPPINGS = [
+    ("ab", "a.b"), ("abd:d", "$.a.b"), ("ac:l", "a.c"), ("e", "e"),
+    ("ei:i", "e"),
+]
+
+#: A jolt spec in three parts: a renamed nested shift, an identity
+#: top-level shift and a default.
+_BATTERY_JOLT = [
+    {"operation": "shift",
+     "spec": {"a": {"b": "ab", "c": "ac"}, "e": "e"}},
+    {"operation": "shift", "spec": {"ab": "ab", "ac": "ac", "e": "e"}},
+    {"operation": "default", "spec": {"ab": "none", "e": 0, "g": {"h": 1}}},
+]
+
+
+def _jolt_reference(value):
+    """The per-path jolt form: get_json_object per leaf, then to_json."""
+    import json
+
+    renamed = [("a.b", "ab"), ("a.c", "ac"), ("e", "e")]
+    value = F.to_json(F.struct(*[
+        F.get_json_object(value, "$." + p).alias(o) for p, o in renamed
+    ]))
+    value = F.to_json(F.struct(*[
+        F.get_json_object(value, "$." + k).alias(k) for k in ("ab", "ac", "e")
+    ]))
+    defaults = _BATTERY_JOLT[2]["spec"]
+    return F.to_json(F.struct(*[
+        F.coalesce(F.get_json_object(value, "$." + k), F.lit(json.dumps(d))).alias(k)
+        for k, d in defaults.items()
+    ]))
+
+
+def test_single_parse_extraction_matches_get_json_object(spark):
+    """``mappings.project`` (one ``from_json`` per payload) against the
+    per-path ``get_json_object`` + ``try_cast`` form, row by row over an
+    adversarial payload battery; the two documented differences are
+    asserted explicitly.  The battery also runs through a three-part
+    jolt spec against an inline get_json_object + to_json reference."""
+    from fluvio_duck_spark.mappings import mapped_column, project
+    from fluvio_duck_spark.plans import json_parses
+    from fluvio_duck_spark.transforms import jolt_transform
+
+    payloads = _AGREEING_PAYLOADS + [_DUPLICATE_KEYS] + _NON_NUMERIC
+    # one local partition: both frames collect in payload order
+    src = spark.createDataFrame([(v,) for v in payloads], "value string").coalesce(1)
+
+    one_parse = project(src, _BATTERY_MAPPINGS)
+    assert json_parses(one_parse) == {"from_json": 1, "get_json_object": 0}
+    per_path = src.select(*[
+        mapped_column(F.col("value"), spec, path) for spec, path in _BATTERY_MAPPINGS
+    ])
+    got = [tuple(r) for r in one_parse.collect()]
+    want = [tuple(r) for r in per_path.collect()]
+    assert len(got) == len(want) == len(payloads)
+    n = len(_AGREEING_PAYLOADS)
+    for payload, g, w in zip(payloads[:n], got, want):
+        assert g == w, payload
+    # sanity: the battery exercises values, not only NULLs
+    assert got[1] == ("1000.0", 1000.0, None, "-0.0", None)
+    assert got[3][0] == "12345678901234567890" and got[0][0] == '{"x":[1,{"y":"z"}]}'
+
+    # duplicate keys: last value wins (serde_json::Value, json.loads);
+    # get_json_object keeps the first
+    assert got[n] == ("3", 3.0, None, "2", 2)
+    assert want[n] == ("1", 1.0, None, "1", 1)
+    # NaN / Infinity: never a value.  get_json_object NULLs every path;
+    # from_json's partial results keep `e`, parsed before the token in
+    # the selected `a`, and NULL the record when the token's field is
+    # not selected
+    assert want[n + 1:] == [(None,) * 5] * 2
+    assert got[n + 1:] == [(None, None, None, "1", 1), (None,) * 5]
+
+    # a leaf that is also a branch, and sibling keys differing only in
+    # case (ambiguous to the case-insensitive analyzer), stay per path
+    for pair in ([("x", "a"), ("y", "a.b")], [("x", "a.b"), ("y", "A.b")]):
+        df = project(src, pair)
+        assert json_parses(df) == {"from_json": 0, "get_json_object": 2}
+        assert df.collect() == src.select(*[
+            mapped_column(F.col("value"), spec, path) for spec, path in pair
+        ]).collect()
+
+    jolted = jolt_transform(src, {"spec": _BATTERY_JOLT})
+    assert json_parses(jolted) == {"from_json": 3, "get_json_object": 0}
+    got = [r.value for r in jolted.collect()]
+    want = [r.value for r in src.select(_jolt_reference(F.col("value")).alias("value")).collect()]
+    for payload, g, w in zip(payloads[:n], got, want):
+        assert g == w, payload
+    assert got[4] == '{"ab":"é中\\n\\"q\\"","e":"false","g":"{\\"h\\": 1}"}'
+    assert got[n] == '{"ab":"3","e":"2","g":"{\\"h\\": 1}"}'
+
+
 def test_fluvio_topics_schema(spark, sf_dir):
     df = fluvio_topics(spark, sf_dir)
     assert df.columns == ["name", "partitions"]

@@ -759,3 +759,64 @@ def test_rows_bound_outer_join_not_product(spark):
     semi = left.join(right.filter("k >= 0"), "k", "left_semi")
     sb = rows_bound(semi._jdf.queryExecution().executedPlan())
     assert sb is None or sb <= 50  # never the unconstrained product path
+
+
+#: The ingest_commit benchmark's five mappings: nested and top-level
+#: plain dot paths.
+_FIVE_MAPPINGS = ("-c tst=payload.VP.tst -c veh:i=payload.VP.veh "
+                  "-c route=payload.VP.route -c k:i=k -c speed:d=payload.VP.spd")
+
+
+def test_mapped_consume_parses_each_payload_once(spark, sf_dir):
+    """>= 2 plain paths: one from_json feeds every mapping, in the batch
+    plan and in the stream's optimized logical plan alike."""
+    from fluvio_duck_spark.plans import json_parses
+    from fluvio_duck_spark.sources.consume import fluvio_consume
+    from fluvio_duck_spark.streaming.consume_stream import fluvio_consume_stream
+
+    once = {"from_json": 1, "get_json_object": 0}
+    batch = fluvio_consume(spark, f"events -A -B --rows 500 {_FIVE_MAPPINGS}",
+                           sf_dir=sf_dir)
+    batch.write.format("noop").mode("overwrite").save()
+    assert json_parses(batch) == once
+    stream = fluvio_consume_stream(spark, f"events -A -B {_FIVE_MAPPINGS}",
+                                   sf_dir=sf_dir)
+    assert json_parses(stream) == once
+
+
+def test_jolt_then_mappings_parse_twice(spark, sf_dir):
+    """examples/jolt.yaml's six-leaf shift parses its input once and the
+    two mappings over its output once more (per-path extraction: 8)."""
+    from fluvio_duck_spark.plans import json_parses
+    from fluvio_duck_spark.queries.consume_queries import JOLT_FULL_YAML
+    from fluvio_duck_spark.sources.consume import fluvio_consume
+
+    df = fluvio_consume(
+        spark, f"events -A --start 5 --rows 300 --transforms-file={JOLT_FULL_YAML} "
+        "-c route=route -c speed:d=speed", sf_dir=sf_dir,
+    ).groupBy("route").agg(F.count("*"), F.avg("speed"))
+    df.collect()
+    assert sum(json_parses(df).values()) <= 2
+
+
+def test_single_mapping_keeps_get_json_object(spark, sf_dir):
+    """One path: a single get_json_object is cheaper than a struct parse."""
+    from fluvio_duck_spark.plans import json_parses
+    from fluvio_duck_spark.sources.consume import fluvio_consume
+
+    df = fluvio_consume(spark, "events -A -B --rows 500 -c k:i=k", sf_dir=sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    assert json_parses(df) == {"from_json": 0, "get_json_object": 1}
+
+
+def test_ordered_budget_keeps_top_n_heap_under_mappings(spark, sf_dir):
+    """A -p selection's --rows budget is an ordered limit: with several
+    mapped paths it must still plan as a top-N heap, not a global sort
+    (two projections between the limit and its sort would break that)."""
+    from fluvio_duck_spark.sources.consume import fluvio_consume
+
+    df = fluvio_consume(spark, f"events -p 2 -B --rows 50 {_FIVE_MAPPINGS}",
+                        sf_dir=sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    ops = assert_plan(df, Exchange=0, Sort=0)
+    assert ops["TakeOrderedAndProject"] == 1
