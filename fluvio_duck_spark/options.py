@@ -99,6 +99,23 @@ class ConsumeOptions:
             return StartPosition("tail", self.tail)
         return StartPosition("end")
 
+    def window(self, leo, rows: bool = True) -> tuple[int, int | None]:
+        """The half-open ``[lo, hi)`` window these options select from one
+        dense offset sequence (``hi`` None = unbounded): the start
+        position gives ``lo``, ``--end`` (inclusive) and, when ``rows``,
+        the ``--rows`` budget give ``hi``.  ``leo`` is the sequence's
+        log-end offset, or a zero-argument callable returning it, called
+        only when the start anchors on the log end (``-T`` / default)."""
+        start = self.calculate_start()
+        lo = start.n if start.kind in ("head", "start") else 0
+        if start.kind in ("tail", "end"):
+            end = leo() if callable(leo) else leo
+            lo = end if start.kind == "end" else max(end - start.n, 0)
+        hi = None if self.end is None else self.end + 1
+        if rows and self.rows is not None:
+            hi = lo + self.rows if hi is None else min(hi, lo + self.rows)
+        return lo, hi
+
     @property
     def has_smartmodule(self) -> bool:
         return self.smartmodule is not None or self.smartmodule_path is not None

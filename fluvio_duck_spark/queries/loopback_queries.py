@@ -25,7 +25,7 @@ Parity steps covered (CONNECTOR.md §"Parity test plan"):
 Scale posture (step 6): the reader's shape is the claim — partition
 discovery + LEO are ONE metadata RPC at plan time, each executor task
 sends its offset window TO the server and receives only that range
-(sources/datasource.py::_read_pp), and results are materialized with
+(sources/datasource.py::_FluvioSource.fetch), and results are materialized with
 ``localCheckpoint`` so the returned DataFrame outlives the server.  The
 server itself is a test double for the SPU; its cost is not the
 measurement.

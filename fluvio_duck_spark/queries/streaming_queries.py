@@ -1801,14 +1801,13 @@ def q_stream_pp_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from fluvio_duck_spark.sources.datasource import register_fluvio_source
     from fluvio_duck_spark.sources.pplog import (
-        pp_footer_leo,
-        pp_partition_dirs,
+        pp_partition_leos,
         write_pp_log_dir,
     )
 
     register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    max_leo = max(pp_footer_leo(d) for d in pp_partition_dirs(log_dir).values())
+    max_leo = max(pp_partition_leos(log_dir).values())
     batch = max(50, -(-max_leo // 4))  # ceil; ≥2 tasks/partition at sf0.001
     s = (
         spark.readStream.format("fluvio")
@@ -1852,14 +1851,13 @@ def q_stream_pp_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fluvio_duck_spark.sources.datasource import register_fluvio_source
     from fluvio_duck_spark.sources.pplog import (
-        pp_footer_leo,
-        pp_partition_dirs,
+        pp_partition_leos,
         write_pp_log_dir,
     )
 
     register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    max_leo = max(pp_footer_leo(d) for d in pp_partition_dirs(log_dir).values())
+    max_leo = max(pp_partition_leos(log_dir).values())
     batch = max(50, -(-max_leo // 4))  # ~4 executor tasks/partition at every sf
     s = (
         spark.readStream.format("fluvio")
@@ -1919,8 +1917,7 @@ def q_stream_pp_consume_opts(spark: SparkSession, sf_dir: str) -> DataFrame:
     string all share one offset algebra."""
     from fluvio_duck_spark.sources.datasource import register_fluvio_source
     from fluvio_duck_spark.sources.pplog import (
-        pp_footer_leo,
-        pp_partition_dirs,
+        pp_partition_leos,
         write_pp_log_dir,
     )
 
@@ -1929,7 +1926,7 @@ def q_stream_pp_consume_opts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # granule scaled to the log so the drain is ~4 executor tasks per
     # partition at every sf (a fixed granule makes task count grow
     # linearly with the log)
-    max_leo = max(pp_footer_leo(d) for d in pp_partition_dirs(log_dir).values())
+    max_leo = max(pp_partition_leos(log_dir).values())
     batch = max(40, -(-max_leo // 4))
     s = (
         spark.readStream.format("fluvio")

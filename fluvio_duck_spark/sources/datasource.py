@@ -25,25 +25,35 @@ Contract notes:
   worker hop per batch).
 * ALL offset algebra resolves at PLAN time, driver-side in
   ``partitions()`` — each ``InputPartition`` carries a concrete
-  ``[lo, hi]`` offset window, so ``read()`` is a pure bounded scan.
-  This mirrors how a real connector plans (offset resolution via the
-  cluster's offset/metadata API at plan time, record fetch at execute
-  time); over the parquet stand-in the "offset API" is footer
-  statistics for the dense whole-log case and a 2–3-column driver read
-  for sparse selections (sub-topics / pinned partitions), whose tail
-  anchor and row budget depend on which offsets the selection owns.
-* ``--rows`` compiles three ways (the builder's two-plan logic at
-  sources/consume.py:160-204 is the spec): a dense-offset-range bound
-  for ``-A`` on a whole-log topic (``hi = lo + rows - 1``); a LOCAL
+  half-open ``[lo, hi)`` offset window (``ConsumeOptions.window``), so
+  ``read()`` is a pure bounded scan.  This mirrors how a real connector
+  plans (offset resolution via the cluster's offset/metadata API at
+  plan time, record fetch at execute time); over the parquet stand-in
+  the "offset API" is footer statistics (``pplog.pp_footer_leo``,
+  ``pplog.pp_partition_leos``) for the dense cases and a 2–3-column
+  driver read for sparse selections (sub-topics / pinned partitions),
+  whose tail anchor and row budget depend on which offsets the
+  selection owns.
+* ``--rows`` compiles three ways (the two budget plans of
+  ``sources/consume.py::fluvio_consume`` are the spec): a dense-offset
+  bound for ``-A`` on a whole-log topic (``hi = lo + rows``); a LOCAL
   top-n when a single partition is pinned (that partition is the whole
   selection); and for ``-A`` over a sparse sub-topic the planner
-  resolves the global budget to an offset bound — the rows-th smallest
-  matching offset at/above the start — before partition planning, so
-  the per-partition readers need no cross-partition coordination
-  (closes the VERDICT r3 parity gap with ``fluvio_consume``).
+  resolves the global budget to an offset bound — one past the
+  rows-th smallest matching offset at/above the start — before
+  partition planning, so the per-partition readers need no
+  cross-partition coordination (closes the VERDICT r3 parity gap with
+  ``fluvio_consume``).
+* Both readers share one record fetch (``_FluvioSource.fetch``) over
+  one partition class, and the SQL table function
+  (sources/udtf.py::FluvioConsumeUDTF) plans and reads through the
+  batch reader.
 """
 
 from __future__ import annotations
+
+import functools
+import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -52,26 +62,14 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from fluvio_duck_spark.options import parse_consume_opts
+from fluvio_duck_spark.options import ConsumeOptions, parse_consume_opts
+from fluvio_duck_spark.sources.consume import (
+    STANDIN_PARTITIONS,
+    _WHOLE_LOG_TOPICS,
+)
+from fluvio_duck_spark.sources.pplog import pp_footer_leo, pp_partition_leos
 
 _SCHEMA = "offset bigint, timestamp timestamp, partition int, value string"
-_N_PARTITIONS = 4  # events stand-in: user_id % 4 (sources/consume.py)
-_WHOLE_LOG_TOPICS = {"events", "*"}
-
-
-def _log_fragments(sf_dir: str) -> list[str]:
-    """Parquet fragment files of the events log: a single file (the
-    driver fixtures) or the part-files of a directory layout (any real
-    multi-file ingest — at scale a topic is never one file).  Footer-
-    statistics walks iterate these; bulk reads go through
-    ``pq.read_table``, which handles both layouts natively."""
-    import glob
-    import os
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return [path]
 
 
 def _ts_to_us(col):
@@ -89,17 +87,36 @@ def _ts_to_us(col):
 
     if pa.types.is_integer(col.type):
         return pc.cast(pc.divide(col, 1000), pa.timestamp("us"))  # ns → µs
-    return pc.cast(col, pa.timestamp("us"))
+    # unsafe: sub-µs digits truncate, like the builder's ``ts div 1000``
+    return pc.cast(col, pa.timestamp("us"), safe=False)
+
+
+def _standin_partition(user_id):
+    """The stand-in partition of each record, ``user_id %
+    STANDIN_PARTITIONS`` as int32 — numpy's floor modulo equals
+    Spark's ``%`` on the fixture's non-negative ids."""
+    import pyarrow as pa
+
+    uid = user_id.to_numpy(zero_copy_only=False)
+    return pa.array((uid % STANDIN_PARTITIONS).astype("int32"))
 
 
 def _read_pp_window(part_dir: str, lo: int, hi: int | None):
     """One partition log's records with offsets in ``[lo, hi)`` —
     row-group-pruned (``filters=`` reaches the parquet footer, so
     fragments wholly outside the window are never decoded), sorted by
-    offset.  THE record fetch of the connector contract: a bounded
-    range read against one partition's own offset sequence."""
+    offset; a partition with no directory reads empty.  The storage
+    read under both the local ``log_dir`` transport and the record
+    server (sources/loopback.py)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    if not os.path.isdir(part_dir):
+        return pa.table({
+            "offset": pa.array([], pa.int64()),
+            "timestamp": pa.array([], pa.timestamp("us")),
+            "value": pa.array([], pa.string()),
+        })
     filters = [("offset", ">=", lo)]
     if hi is not None:
         filters.append(("offset", "<", hi))
@@ -109,18 +126,129 @@ def _read_pp_window(part_dir: str, lo: int, hi: int | None):
 
 
 class _FluvioPartition(InputPartition):
-    """One Fluvio partition plus its plan-time-resolved offset window.
+    """One executor task: the half-open ``[lo, hi)`` window (``hi``
+    None = unbounded) of partition ``pid``'s offsets — its own dense
+    sequence (log_dir/server) or the stand-in's global one (sf_dir,
+    where pid -1 reads every stand-in partition).  ``budget`` is a
+    LOCAL top-n applied after the window, for a pinned stand-in
+    partition that is the whole selection."""
 
-    ``lo`` is inclusive; ``hi`` is inclusive or None (unbounded);
-    ``budget`` is a LOCAL top-n applied after the window when a single
-    pinned partition is the whole selection."""
-
-    def __init__(self, pid: int, lo: int = 0, hi: int | None = None,
+    def __init__(self, pid: int, lo: int, hi: int | None,
                  budget: int | None = None):
         self.pid = pid
         self.lo = lo
         self.hi = hi
         self.budget = budget
+
+
+def _split(pid: int, lo: int, hi: int, granule: int) -> list[_FluvioPartition]:
+    """Granule-sized chunks of one resolved ``[lo, hi)`` window (none
+    when the window is empty)."""
+    return [
+        _FluvioPartition(pid, c, min(c + granule, hi))
+        for c in range(lo, hi, granule)
+    ]
+
+
+class _FluvioSource:
+    """The transport options both readers take, and the one record fetch
+    their ``read()`` runs in executor tasks."""
+
+    def __init__(self, options):
+        self.topic = options.get("topic", "events")
+        self.sf_dir = options.get("sf_dir")
+        # log_dir mode: the path IS the topic — a directory of
+        # per-partition parquet logs (``partition=<k>/part-*.parquet``,
+        # each fragment carrying its own dense offset sequence), the
+        # reference's actual storage model (src/partition.rs:107-134).
+        # All offset algebra then anchors per partition.
+        self.log_dir = options.get("log_dir")
+        # server mode: the SAME per-partition offset model consumed over
+        # the loopback record-server protocol (sources/loopback.py) —
+        # CONNECTOR.md's second transport.  Plan-time metadata RPC for
+        # partition discovery + LEO, executor-side windowed fetch.
+        self.server = options.get("server")
+        if not self.sf_dir and not self.log_dir and not self.server:
+            raise ValueError(
+                "fluvio datasource requires .option('sf_dir', ...), "
+                ".option('log_dir', ...), or .option('server', ...)"
+            )
+        # server-side SmartModule filter (CONNECTOR.md §5 MAY clause, a
+        # loopback.translate_sql_filter DSL) and transform-CHAIN
+        # (loopback.translate_transform_chain — the SPU executing the
+        # chain before bytes cross the network, reference
+        # src/consume.rs:650-673) pushdown, shipped with every fetch.
+        # Offsets still advance over the UNfiltered log: the server
+        # drops records, not offsets.  loopback_filter_pushdown and
+        # loopback_transform_pushdown pin pushed == engine bit-identical.
+        import json
+
+        def pushed(key: str):
+            raw = options.get(key)
+            if raw is not None and not self.server:
+                raise ValueError(f".option('{key}', ...) requires server mode")
+            return None if raw is None else json.loads(raw)
+
+        self.push_filter = pushed("filter")
+        self.push_chain = pushed("chain")
+
+    def _standin_leo(self) -> int:
+        """The stand-in log's LEO from footer statistics."""
+        return pp_footer_leo(
+            os.path.join(self.sf_dir, "events.parquet"), "event_id"
+        )
+
+    def fetch(self, p: _FluvioPartition):
+        """THE record fetch of the connector contract: one partition's
+        ``[lo, hi)`` window as an Arrow table of
+        ``offset/timestamp/partition/value``, offset-ordered per
+        partition — a bounded range read over the record server
+        (executor-side RPC), a partition log directory, or the stand-in
+        table (the window and sub-topic pushed into the parquet read, so
+        row groups outside them are pruned on footer statistics)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if self.server or self.log_dir:
+            if self.server:
+                from fluvio_duck_spark.sources.loopback import server_fetch
+
+                tbl = server_fetch(self.server, p.pid, p.lo, p.hi,
+                                   flt=self.push_filter, chain=self.push_chain)
+            else:
+                tbl = _read_pp_window(
+                    os.path.join(self.log_dir, f"partition={p.pid}"),
+                    p.lo, p.hi,
+                )
+            part = pa.array([p.pid] * tbl.num_rows, pa.int32())
+        else:
+            import pyarrow.parquet as pq
+
+            filters = [("event_id", ">=", p.lo)]
+            if p.hi is not None:
+                filters.append(("event_id", "<", p.hi))
+            if self.topic not in _WHOLE_LOG_TOPICS:
+                filters.append(("event_type", "==", self.topic))
+            tbl = pq.read_table(
+                os.path.join(self.sf_dir, "events.parquet"),
+                columns=["event_id", "ts", "user_id", "props"],
+                filters=filters,
+            )
+            tbl = tbl.rename_columns(["offset", "timestamp", "user_id", "value"])
+            tbl = tbl.append_column("partition", _standin_partition(tbl["user_id"]))
+            if p.pid >= 0:
+                tbl = tbl.filter(pc.equal(tbl["partition"], p.pid))
+            tbl = tbl.sort_by("offset").slice(0, p.budget)
+            part = tbl["partition"]
+        return pa.table({
+            "offset": pc.cast(tbl["offset"], pa.int64()),
+            "timestamp": _ts_to_us(tbl["timestamp"]),
+            "partition": part,
+            "value": tbl["value"],
+        })
+
+    def read(self, partition: _FluvioPartition):
+        yield from self.fetch(partition).to_batches(max_chunksize=8192)
 
 
 class FluvioDataSource(DataSource):
@@ -137,51 +265,15 @@ class FluvioDataSource(DataSource):
         return FluvioReader(self.options)
 
 
-class FluvioReader(DataSourceReader):
-    def __init__(self, options):
-        self.topic = options.get("topic", "events")
-        # log_dir mode: the path IS the topic — a directory of
-        # per-partition parquet logs (``partition=<k>/part-*.parquet``,
-        # each fragment carrying its own dense offset sequence), the
-        # reference's actual storage model (src/partition.rs:107-134).
-        # All offset algebra then anchors per partition.
-        self.log_dir = options.get("log_dir")
-        # server mode: the SAME per-partition offset model consumed over
-        # the loopback record-server protocol (sources/loopback.py) —
-        # CONNECTOR.md's second transport.  Plan-time metadata RPC for
-        # partition discovery + LEO, executor-side windowed fetch.
-        self.server = options.get("server")
-        # server-side SmartModule filter pushdown (CONNECTOR.md §5 MAY
-        # clause): a translated filter DSL (loopback.translate_sql_filter)
-        # shipped with every fetch so the server drops records before
-        # they cross the wire.  Results must be bit-identical to the
-        # engine-side chain — loopback_filter_pushdown pins it.
-        push = options.get("filter")
-        if push is not None and not self.server:
-            raise ValueError(".option('filter', ...) requires server mode")
-        import json as _json
+class FluvioReader(_FluvioSource, DataSourceReader):
+    """The batch reader: resolves the ``args`` option string to offset
+    windows in ``partitions()``; ``opts`` optionally supplies it already
+    parsed (the SQL table function's bind)."""
 
-        self.push_filter = _json.loads(push) if push is not None else None
-        # server-side transform-CHAIN pushdown (r9): a whole translated
-        # chain (loopback.translate_transform_chain — filter + jolt
-        # links) shipped with every fetch, the connector analogue of the
-        # SPU executing the chain before bytes cross the network
-        # (reference src/consume.rs:650-673).  loopback_transform_pushdown
-        # pins pushed == engine bit-identical.
-        push_chain = options.get("chain")
-        if push_chain is not None and not self.server:
-            raise ValueError(".option('chain', ...) requires server mode")
-        self.push_chain = (
-            _json.loads(push_chain) if push_chain is not None else None
-        )
-        self.sf_dir = options.get("sf_dir")
-        if not self.sf_dir and not self.log_dir and not self.server:
-            raise ValueError(
-                "fluvio datasource requires .option('sf_dir', ...), "
-                ".option('log_dir', ...), or .option('server', ...)"
-            )
+    def __init__(self, options, opts: ConsumeOptions | None = None):
+        super().__init__(options)
         args = options.get("args", "-B")
-        self.opts = parse_consume_opts(f"{self.topic} {args}".split())
+        self.opts = opts or parse_consume_opts(f"{self.topic} {args}".split())
         # The DataSource is the RAW connector scan (record schema
         # offset/timestamp/partition/value); transform chains and typed
         # -c mappings live ABOVE the transport seam.  Reject them loudly
@@ -196,18 +288,13 @@ class FluvioReader(DataSourceReader):
                 "--transform/--smartmodule/-c apply engine-side — bind "
                 "through fluvio_consume(spark, opts, source=<this scan>)"
             )
-        # LOCAL top-n: a pinned single partition is the whole selection,
-        # so the --rows budget applies within the one reader task.
-        self.local_budget = (
-            self.opts.rows is not None and not self.opts.all_partitions
-        )
         # Batch task granule: each partition's offset window is split
         # into ≤max_rows_per_task chunks so scan parallelism exceeds
         # n_partitions (at 100 TB one partition log is far bigger than
         # one task).  Unbounded windows pin to plan-time LEO first —
         # which also gives batch reads snapshot isolation on a growing
-        # log.  Local top-n (pinned partition + --rows) stays one task
-        # by construction.
+        # log.  Local top-n (pinned stand-in partition + --rows) stays
+        # one task by construction.
         self.task_rows = int(options.get("max_rows_per_task", str(1 << 20)))
         if self.task_rows < 1:
             # a zero/negative granule would make _split's range() step
@@ -228,26 +315,10 @@ class FluvioReader(DataSourceReader):
             # partition log, src/consume.rs:687-695).
             self.task_rows = 1 << 62
 
-    def _split(self, pid: int, lo: int, hi: int,
-               part_dir: str | None) -> "list[_FluvioPartition]":
-        """Granule-sized [clo, chi]-inclusive chunks of one partition's
-        resolved window (empty when hi < lo)."""
-        out = []
-        for c in range(lo, hi + 1, self.task_rows):
-            p = _FluvioPartition(pid, c, min(c + self.task_rows - 1, hi))
-            p.part_dir = part_dir
-            p.server = self.server
-            p.push_filter = getattr(self, "push_filter", None)
-            p.push_chain = getattr(self, "push_chain", None)
-            out.append(p)
-        return out
-
     # -- plan-time offset resolution --------------------------------------
     def _selection_offsets(self):
         """Sorted offsets the selection owns — the stand-in's analogue of
         the cluster offset index (driver-side, 2–3 columns, plan time)."""
-        import os
-
         import numpy as np
         import pyarrow.parquet as pq
 
@@ -263,236 +334,83 @@ class FluvioReader(DataSourceReader):
         if self.topic not in _WHOLE_LOG_TOPICS:
             mask &= tbl["event_type"].to_numpy(zero_copy_only=False) == self.topic
         if not self.opts.all_partitions:
-            uid = tbl["user_id"].to_numpy(zero_copy_only=False)
-            mask &= (uid % _N_PARTITIONS) == int(self.opts.partition)
+            part = _standin_partition(tbl["user_id"]).to_numpy()
+            mask &= part == int(self.opts.partition)
         off = tbl["event_id"].to_numpy(zero_copy_only=False)[mask]
         off.sort()
         return off
 
-    def _footer_leo(self) -> int:
-        """Whole-log LEO from parquet footer statistics — no data scan."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        leo = -1
-        for frag in _log_fragments(self.sf_dir):
-            pf = pq.ParquetFile(frag)
-            idx = pf.schema_arrow.get_field_index("event_id")
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is not None and st.max is not None:
-                    leo = max(leo, int(st.max))
-        return leo + 1
-
     def _resolve_window(self) -> tuple[int, int | None]:
-        """Offset algebra → concrete [lo, hi] window, at plan time.
+        """The stand-in's ``[lo, hi)`` window, at plan time.
 
         Dense case (whole log, all partitions): footer-stats LEO and
         arithmetic bounds only.  Sparse case (sub-topic or pinned
         partition): the tail anchor is the SELECTION's log-end — the max
         offset the selection owns, plus one — matching the builder,
         which filters the log before applying the offset algebra
-        (sources/consume.py:152-160); likewise real Fluvio resolves -T
-        against the chosen partition's LEO, not some global counter."""
-        dense = (
-            self.topic in _WHOLE_LOG_TOPICS and self.opts.all_partitions
-        )
-        sel = None  # lazily-resolved sorted selection offsets
+        (sources/consume.py::_with_offset_bounds); likewise real Fluvio
+        resolves -T against the chosen partition's LEO, not some global
+        counter.  A sparse ``-A`` budget ends one past the rows-th
+        smallest selected offset in the window; a pinned partition's
+        budget is the task's local top-n."""
+        if self.topic in _WHOLE_LOG_TOPICS and self.opts.all_partitions:
+            return self.opts.window(self._standin_leo)
+        selection = functools.cache(self._selection_offsets)  # read once
 
-        start = self.opts.calculate_start()
-        lo = 0
-        if start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind in ("tail", "end"):
-            if dense:
-                leo = self._footer_leo()
-            else:
-                sel = self._selection_offsets()
-                leo = int(sel[-1]) + 1 if len(sel) else 0
-            lo = leo if start.kind == "end" else max(leo - start.n, 0)
+        def selection_leo() -> int:
+            off = selection()
+            return int(off[-1]) + 1 if len(off) else 0
 
-        hi = self.opts.end  # inclusive, may be None
-        if self.opts.rows is not None and not self.local_budget:
-            if dense:
-                # dense offsets: first n at/above lo is pure arithmetic
-                budget_hi = lo + self.opts.rows - 1
-            else:
-                # sparse sub-topic with -A: resolve the global budget to
-                # the rows-th smallest matching offset in [lo, hi]
-                if sel is None:
-                    sel = self._selection_offsets()
-                win = sel[sel >= lo]
-                if hi is not None:
-                    win = win[win <= hi]
-                if len(win) <= self.opts.rows:
-                    budget_hi = None  # budget exceeds selection: keep all
-                else:
-                    budget_hi = int(win[self.opts.rows - 1])
-            if budget_hi is not None:
-                hi = budget_hi if hi is None else min(hi, budget_hi)
+        lo, hi = self.opts.window(selection_leo, rows=False)
+        if self.opts.rows is not None and self.opts.all_partitions:
+            win = selection()
+            win = win[win >= lo] if hi is None else win[(win >= lo) & (win < hi)]
+            if len(win) > self.opts.rows:
+                hi = int(win[self.opts.rows - 1]) + 1
         return lo, hi
-
-    # -- log_dir (per-partition offset) planning ---------------------------
-    def _pp_partition_dirs(self) -> dict[int, str]:
-        """partition id → fragment directory of a per-partition log."""
-        from fluvio_duck_spark.sources.pplog import pp_partition_dirs
-
-        return pp_partition_dirs(self.log_dir)
-
-    def _pp_footer_leo(self, part_dir: str) -> int:
-        """One partition's LEO from ITS fragments' footer statistics —
-        the per-replica leo read of reference src/partition.rs:131."""
-        from fluvio_duck_spark.sources.pplog import pp_footer_leo
-
-        return pp_footer_leo(part_dir)
-
-    def _pp_window(self, leo: int) -> tuple[int, int | None]:
-        """One partition's [lo, hi] window from ITS OWN log end —
-        pure arithmetic (offsets are dense per partition), shared by
-        the local log_dir and loopback server transports."""
-        start = self.opts.calculate_start()
-        lo = 0
-        if start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind in ("tail", "end"):
-            lo = leo if start.kind == "end" else max(leo - start.n, 0)
-        hi = self.opts.end
-        if self.opts.rows is not None:
-            # dense per-partition offsets: each partition's budget
-            # is arithmetic (matches the builder's per-partition
-            # --rows semantics, sources/consume.py::_pp_row_budget)
-            budget_hi = lo + self.opts.rows - 1
-            hi = budget_hi if hi is None else min(hi, budget_hi)
-        return lo, hi
-
-    def _pp_partitions(self):
-        """One InputPartition per partition log, each with a window
-        resolved against that partition's OWN log end (no data scan at
-        plan time).  LEO comes from footer statistics (log_dir mode) or
-        the record server's metadata RPC (server mode) — the only
-        difference between the two transports at plan time."""
-        if self.server:
-            from fluvio_duck_spark.sources.loopback import server_parts
-
-            leos = server_parts(self.server)
-            fetch = {pid: None for pid in leos}
-        else:
-            dirs = self._pp_partition_dirs()
-            leos = {pid: self._pp_footer_leo(d) for pid, d in dirs.items()}
-            fetch = dirs
-        if not self.opts.all_partitions:
-            pid = int(self.opts.partition)
-            if pid not in leos:
-                # unknown partition → empty scan (the stand-in's
-                # unknown-topic convention; Spark requires ≥1 partition)
-                p = _FluvioPartition(pid, 0, None)
-                p.empty = True
-                return [p]
-            leos = {pid: leos[pid]}
-        out = []
-        for pid in sorted(leos):
-            lo, hi = self._pp_window(leos[pid])
-            # unbounded → plan-time snapshot at this partition's LEO
-            hi_eff = leos[pid] - 1 if hi is None else min(hi, leos[pid] - 1)
-            out.extend(self._split(pid, lo, hi_eff, fetch.get(pid)))
-        if not out:  # empty windows everywhere; Spark needs ≥1 partition
-            p = _FluvioPartition(-1, 0, None)
-            p.empty = True
-            out.append(p)
-        return out
 
     def partitions(self):
         # reference semantics: partition 0 unless -A/--all-partitions
         # (options.py:155-156; the reference parses -p but pins 0 —
         # we honor the parsed value, SURVEY §1.4.2 fix)
         if self.log_dir or self.server:
-            return self._pp_partitions()
-        lo, hi = self._resolve_window()
-        budget = self.opts.rows if self.local_budget else None
-        if not self.opts.all_partitions:
-            # local top-n needs the whole pinned selection in ONE task
-            return [_FluvioPartition(int(self.opts.partition), lo, hi, budget)]
-        hi_eff = self._footer_leo() - 1 if hi is None else hi
-        out = []
-        for p in range(_N_PARTITIONS):
-            out.extend(self._split(p, lo, hi_eff, None))
-        if not out:
-            p = _FluvioPartition(-1, 0, None)
-            p.empty = True
-            out.append(p)
-        return out
-
-    def _read_pp(self, partition: "_FluvioPartition"):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        hi_excl = None if partition.hi is None else partition.hi + 1
-        if partition.part_dir is None and getattr(partition, "server", None):
-            # loopback transport: the window travels to the server —
-            # the executor-side bounded range read of CONNECTOR.md §1
-            from fluvio_duck_spark.sources.loopback import server_fetch
-
-            tbl = server_fetch(
-                partition.server, partition.pid, partition.lo, hi_excl,
-                flt=getattr(partition, "push_filter", None),
-                chain=getattr(partition, "push_chain", None),
-            )
+            # each partition's window resolves against its OWN log end
+            # (dense offsets: pure arithmetic, budget included), and an
+            # unbounded window pins to that plan-time LEO
+            leos = pp_partition_leos(self.log_dir, self.server)
+            if not self.opts.all_partitions:
+                # an unknown pinned partition plans an empty scan (the
+                # stand-in's unknown-topic convention)
+                pid = self.opts.partition
+                leos = {pid: leos[pid]} if pid in leos else {}
+            windows = {}
+            for pid, leo in leos.items():
+                lo, hi = self.opts.window(leo)
+                windows[pid] = (lo, leo if hi is None else min(hi, leo))
         else:
-            tbl = _read_pp_window(partition.part_dir, partition.lo, hi_excl)
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["offset"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["timestamp"]),
-                "partition": pa.array(
-                    [partition.pid] * tbl.num_rows, pa.int32()
-                ),
-                "value": tbl["value"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
+            lo, hi = self._resolve_window()
+            if not self.opts.all_partitions:
+                # local top-n needs the whole pinned selection in ONE task
+                return [_FluvioPartition(
+                    self.opts.partition, lo, hi, self.opts.rows
+                )]
+            hi = self._standin_leo() if hi is None else hi
+            windows = {pid: (lo, hi) for pid in range(STANDIN_PARTITIONS)}
+        out = [
+            p for pid, (lo, hi) in windows.items()
+            for p in _split(pid, lo, hi, self.task_rows)
+        ]
+        # empty windows everywhere; Spark needs >= 1 partition
+        return out or [_FluvioPartition(-1, 0, 0)]
 
-    def read(self, partition: _FluvioPartition):
-        import os
-
+    def table(self):
+        """Every planned partition's records as one offset-ordered Arrow
+        table, read in this process — the SQL table function's scan."""
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        if getattr(partition, "empty", False):
-            return
-        if (getattr(partition, "part_dir", None) is not None
-                or getattr(partition, "server", None)):
-            yield from self._read_pp(partition)
-            return
-        # offset window + sub-topic predicate pushed into the parquet
-        # read (row-group pruning on event_id footer statistics)
-        filters = [("event_id", ">=", partition.lo)]
-        if partition.hi is not None:
-            filters.append(("event_id", "<=", partition.hi))
-        if self.topic not in _WHOLE_LOG_TOPICS:
-            filters.append(("event_type", "==", self.topic))
-        tbl = pq.read_table(
-            os.path.join(self.sf_dir, "events.parquet"),
-            columns=["event_id", "ts", "user_id", "props"],
-            filters=filters,
-        )
-        uid = tbl["user_id"].to_numpy(zero_copy_only=False)
-        part = pa.array((uid % _N_PARTITIONS).astype("int32"))
-        tbl = tbl.append_column("partition", part)
-        tbl = tbl.filter(pc.equal(tbl["partition"], partition.pid))
-        if partition.budget is not None:
-            tbl = tbl.sort_by("event_id").slice(0, partition.budget)
-
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["event_id"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["ts"]),
-                "partition": tbl["partition"],
-                "value": tbl["props"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
+        return pa.concat_tables(
+            [self.fetch(p) for p in self.partitions()]
+        ).sort_by("offset")
 
 
 def register_fluvio_source(spark) -> None:
@@ -503,21 +421,7 @@ def register_fluvio_source(spark) -> None:
         pass  # already registered — Spark raises on duplicate names
 
 
-class _FluvioStreamPartition(InputPartition):
-    """One executor task of a streaming micro-batch: a half-open
-    ``[lo, hi)`` window of ONE partition log's own offsets (pp modes)
-    or of the global stand-in sequence (sf_dir mode)."""
-
-    def __init__(self, pid: int, lo: int, hi: int, part_dir: str | None = None,
-                 server: str | None = None):
-        self.pid = pid
-        self.lo = lo
-        self.hi = hi  # exclusive
-        self.part_dir = part_dir
-        self.server = server
-
-
-class FluvioStreamReader(DataSourceStreamReader):
+class FluvioStreamReader(_FluvioSource, DataSourceStreamReader):
     """``spark.readStream.format("fluvio")`` — the reference's
     continuous mode (``-d``) as a FULL Python streaming DataSource
     (the ``DataSourceStreamReader`` protocol, not the driver-funnel
@@ -526,14 +430,14 @@ class FluvioStreamReader(DataSourceStreamReader):
     Division of labor, exactly the batch reader's:
 
     * offset management is driver-side METADATA work — ``latestOffset``
-      re-probes each partition log's LEO from parquet footer statistics
-      every trigger (so a growing log is followed; reference
+      re-probes each partition log's LEO (footer statistics or the
+      record server's metadata RPC) every trigger (so a growing log is followed; reference
       src/consume.rs:675), no row decoded;
     * record fetch is EXECUTOR-side — ``partitions(start, end)`` plans
       the micro-batch as offset-windowed ``InputPartition``s and
-      ``read()`` runs in executor tasks with the window pushed into the
-      parquet scan (``filters=`` → row-group pruning), emitting Arrow
-      batches.  No record ever funnels through the driver.
+      ``read()`` runs the batch reader's fetch in executor tasks with the
+      window pushed into the parquet scan (``filters=`` → row-group
+      pruning), emitting Arrow batches.  No record ever funnels through the driver.
 
     ``.option("log_dir", ...)`` selects the per-partition offset model
     (reference src/partition.rs:107-134): the stream position is one
@@ -565,15 +469,7 @@ class FluvioStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options):
-        self.topic = options.get("topic", "events")
-        self.log_dir = options.get("log_dir")
-        self.server = options.get("server")  # loopback transport (CONNECTOR.md)
-        self.sf_dir = options.get("sf_dir")
-        if not self.sf_dir and not self.log_dir and not self.server:
-            raise ValueError(
-                "fluvio datasource requires .option('sf_dir', ...), "
-                ".option('log_dir', ...), or .option('server', ...)"
-            )
+        super().__init__(options)
         if options.get("args") is not None:
             # the batch reader's option string has no streaming meaning
             # (offset positioning = the checkpoint cursor; budgets =
@@ -607,22 +503,6 @@ class FluvioStreamReader(DataSourceStreamReader):
         # floor every later plan at the true position so ranges delivered
         # before the kill are never re-planned (exactly-once preserved).
         self._floor: dict[str, int] = {}
-        # server-side SmartModule filter pushdown (CONNECTOR.md §5 MAY
-        # clause), symmetric with the batch reader: offsets still
-        # advance over the UNfiltered log (cursors are storage
-        # positions; the filter drops records, not offsets)
-        push = options.get("filter")
-        if push is not None and not self.server:
-            raise ValueError(".option('filter', ...) requires server mode")
-        import json as _json
-
-        self.push_filter = _json.loads(push) if push is not None else None
-        push_chain = options.get("chain")
-        if push_chain is not None and not self.server:
-            raise ValueError(".option('chain', ...) requires server mode")
-        self.push_chain = (
-            _json.loads(push_chain) if push_chain is not None else None
-        )
         if self.push_chain and any(
             op.get("kind") == "fold" for op in self.push_chain
         ):
@@ -638,45 +518,19 @@ class FluvioStreamReader(DataSourceStreamReader):
             )
 
     # -- offset management (driver-side, metadata-only) --------------------
-    def _pp_dirs(self) -> dict[int, str]:
-        from fluvio_duck_spark.sources.pplog import pp_partition_dirs
-
-        return pp_partition_dirs(self.log_dir)
-
     def _leo_map(self) -> dict[str, int]:
-        """Current log-end offset per cursor key — metadata only
-        (footer statistics or the server's offset RPC), re-probed every
-        trigger so appends are picked up."""
-        if self.server:
-            from fluvio_duck_spark.sources.loopback import server_parts
-
+        """Current log-end offset per cursor key (a partition id, or
+        ``offset`` for the stand-in's one global sequence) — metadata
+        only, re-probed every trigger so appends are picked up."""
+        if self.log_dir or self.server:
             return {
                 str(pid): leo
-                for pid, leo in sorted(server_parts(self.server).items())
+                for pid, leo in pp_partition_leos(self.log_dir, self.server).items()
             }
-        if self.log_dir:
-            from fluvio_duck_spark.sources.pplog import pp_footer_leo
-
-            return {
-                str(pid): pp_footer_leo(d)
-                for pid, d in sorted(self._pp_dirs().items())
-            }
-        import pyarrow.parquet as pq
-
-        leo = -1
-        for frag in _log_fragments(self.sf_dir):
-            pf = pq.ParquetFile(frag)
-            idx = pf.schema_arrow.get_field_index("event_id")
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is not None and st.max is not None:
-                    leo = max(leo, int(st.max))
-        return {"offset": leo + 1}
+        return {"offset": self._standin_leo()}
 
     def initialOffset(self) -> dict:
-        if self.server or self.log_dir:
-            return {k: 0 for k in self._leo_map()}
-        return {"offset": 0}
+        return {k: 0 for k in self._leo_map()}
 
     def latestOffset(self) -> dict:
         leo = self._leo_map()
@@ -713,91 +567,17 @@ class FluvioStreamReader(DataSourceStreamReader):
                 self._floor[k] = max(self._floor.get(k, 0), s)
 
     def partitions(self, start: dict, end: dict):
+        """Each cursor key's ``[start, end)`` range, floored at the
+        restart position, in granule-sized tasks."""
         self._learn_position(start, end)
-        out: list[_FluvioStreamPartition] = []
-        if self.log_dir or self.server:
-            if self.server:
-                from fluvio_duck_spark.sources.loopback import server_parts
-
-                fetch = {pid: None for pid in server_parts(self.server)}
-            else:
-                fetch = self._pp_dirs()
-            for pid, d in sorted(fetch.items()):
-                lo = max(
-                    int(start.get(str(pid), 0)),
-                    self._floor.get(str(pid), 0),
-                )
-                hi = int(end.get(str(pid), lo))
-                for c in range(lo, hi, self.granule):
-                    p = _FluvioStreamPartition(
-                        pid, c, min(c + self.granule, hi),
-                        part_dir=d, server=self.server,
-                    )
-                    p.push_filter = self.push_filter
-                    p.push_chain = self.push_chain
-                    out.append(p)
-            return out
-        lo = max(int(start["offset"]), self._floor.get("offset", 0))
-        hi = int(end["offset"])
-        for c in range(lo, hi, self.granule):
-            out.append(_FluvioStreamPartition(-1, c, min(c + self.granule, hi)))
-        return out
-
-    def read(self, partition: _FluvioStreamPartition):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        if partition.part_dir is not None or partition.server:
-            if partition.part_dir is None:
-                from fluvio_duck_spark.sources.loopback import server_fetch
-
-                tbl = server_fetch(
-                    partition.server, partition.pid, partition.lo,
-                    partition.hi,
-                    flt=getattr(partition, "push_filter", None),
-                    chain=getattr(partition, "push_chain", None),
-                )
-            else:
-                tbl = _read_pp_window(
-                    partition.part_dir, partition.lo, partition.hi
-                )
-            out = pa.table(
-                {
-                    "offset": pc.cast(tbl["offset"], pa.int64()),
-                    "timestamp": _ts_to_us(tbl["timestamp"]),
-                    "partition": pa.array(
-                        [partition.pid] * tbl.num_rows, pa.int32()
-                    ),
-                    "value": tbl["value"],
-                }
+        return [
+            p for k, e in end.items()
+            for p in _split(
+                -1 if k == "offset" else int(k),
+                max(int(start.get(k, 0)), self._floor.get(k, 0)),
+                int(e), self.granule,
             )
-            yield from out.to_batches(max_chunksize=8192)
-            return
-        filters = [
-            ("event_id", ">=", partition.lo), ("event_id", "<", partition.hi)
         ]
-        if self.topic not in _WHOLE_LOG_TOPICS:
-            filters.append(("event_type", "==", self.topic))
-        tbl = pq.read_table(
-            os.path.join(self.sf_dir, "events.parquet"),
-            columns=["event_id", "ts", "user_id", "props"],
-            filters=filters,
-        ).sort_by("event_id")
-        uid = tbl["user_id"].to_numpy(zero_copy_only=False)
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["event_id"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["ts"]),
-                "partition": pa.array(
-                    (uid % _N_PARTITIONS).astype("int32")
-                ),
-                "value": tbl["props"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
 
     def commit(self, end: dict) -> None:
         pass  # the log is immutable — nothing to clean up

@@ -121,33 +121,25 @@ class RecordServer(socketserver.ThreadingTCPServer):
         return f"{host}:{port}"
 
     def parts_leo(self) -> dict[str, int]:
-        from fluvio_duck_spark.sources.pplog import (
-            pp_footer_leo,
-            pp_partition_dirs,
-        )
+        from fluvio_duck_spark.sources.pplog import pp_partition_leos
 
         return {
-            str(pid): pp_footer_leo(d)
-            for pid, d in sorted(pp_partition_dirs(self.log_dir).items())
+            str(pid): leo
+            for pid, leo in pp_partition_leos(self.log_dir).items()
         }
 
     def fetch_ipc(self, pid: int, lo: int, hi: int | None,
                   flt: dict | None = None,
                   chain: list[dict] | None = None) -> bytes:
+        import os
+
         import pyarrow as pa
 
         from fluvio_duck_spark.sources.datasource import _read_pp_window
-        from fluvio_duck_spark.sources.pplog import pp_partition_dirs
 
-        dirs = pp_partition_dirs(self.log_dir)
-        if pid not in dirs:
-            tbl = pa.table(
-                {"offset": pa.array([], pa.int64()),
-                 "timestamp": pa.array([], pa.timestamp("us")),
-                 "value": pa.array([], pa.string())}
-            )
-        else:
-            tbl = _read_pp_window(dirs[pid], lo, hi)
+        tbl = _read_pp_window(
+            os.path.join(self.log_dir, f"partition={pid}"), lo, hi
+        )
         if flt is not None:
             tbl = _apply_server_filter(tbl, flt)
         if chain is not None:
@@ -291,37 +283,37 @@ def _num_text(x) -> str:
     return f"{sign}{mant}E{d.adjusted()}"
 
 
-def _extract_like_get_json_object(value_text: str | None,
-                                  dot_path: str) -> str | None:
-    """Mirror Spark's ``get_json_object(value, '$.' + dot_path)``: the
-    STRING extraction of the matched node — numbers re-rendered the way
-    Jackson/Spark writes them back (see _num_text; verified
-    byte-identical against the engine in
-    tests/test_loopback.py::test_chain_semantics_match_engine_jolt),
-    unquoted content for strings, ``true``/``false`` for booleans,
-    compact JSON for objects/arrays, None for a missing path / JSON
-    null / unparseable payload."""
+def _parse_json(value_text: str | None):
+    """One payload parsed once for any number of
+    :func:`_walk_like_get_json_object` calls; a SQL NULL or unparseable
+    payload parses to None, which every path walks to None."""
     if value_text is None:
         return None
     try:
-        obj = json.loads(value_text)
+        return json.loads(value_text)
     except ValueError:
         return None
+
+
+def _walk_like_get_json_object(doc, dot_path: str) -> str | None:
+    """Mirror Spark's ``get_json_object(value, '$.' + dot_path)`` over
+    an already-parsed payload (:func:`_parse_json`): the STRING
+    extraction of the matched node as
+    :func:`_render_node_like_get_json_object` renders it (verified
+    byte-identical against the engine in
+    tests/test_loopback.py::test_chain_semantics_match_engine_jolt),
+    None for a missing path / JSON null / unparseable payload."""
     for part in dot_path.split("."):
-        if not isinstance(obj, dict):
+        if not isinstance(doc, dict):
             return None
-        obj = obj.get(part)
-    if obj is None:
-        return None
-    if isinstance(obj, bool):
-        return "true" if obj else "false"
-    if isinstance(obj, str):
-        return obj
-    if isinstance(obj, (int, float)):
-        return _num_text(obj)
-    # nested object/array: compact re-serialization (ints inside survive
-    # as ints; float rendering follows _num_text via json.dumps repr)
-    return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
+        doc = doc.get(part)
+    return None if doc is None else _render_node_like_get_json_object(doc)
+
+
+def _extract_like_get_json_object(value_text: str | None,
+                                  dot_path: str) -> str | None:
+    """:func:`_walk_like_get_json_object` over one unparsed payload."""
+    return _walk_like_get_json_object(_parse_json(value_text), dot_path)
 
 
 def _render_node_like_get_json_object(node) -> str | None:
@@ -349,12 +341,7 @@ def _unnest_like_array_map(value_text: str | None,
     list of element renderings when the path names a non-empty JSON
     array, else None (no output records — missing path, non-array node,
     malformed payload, or empty array)."""
-    if value_text is None:
-        return None
-    try:
-        obj = json.loads(value_text)
-    except ValueError:
-        return None
+    obj = _parse_json(value_text)
     if dot_path != "$":
         for part in dot_path[2:].split("."):
             if not isinstance(obj, dict):
@@ -365,6 +352,44 @@ def _unnest_like_array_map(value_text: str | None,
     return [_render_node_like_get_json_object(e) for e in obj]
 
 
+#: Spark's string → number cast bodies, after trimming U+0000-U+0020
+#: (and U+007F for integral casts): an integral body is one optional
+#: sign and ASCII digits; a fractional body is a Java decimal or hex
+#: float literal with an optional f/F/d/D suffix, ``[+-]NaN``,
+#: ``[+-]Infinity`` or Spark's case-insensitive special literals.
+_INTEGRAL_RE = re.compile(r"[+-]?[0-9]+\Z")
+_DECIMAL_RE = re.compile(
+    r"([+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)[fFdD]?\Z")
+_HEX_RE = re.compile(
+    r"([+-]?0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)"
+    r"[pP][+-]?[0-9]+)[fFdD]?\Z")
+_SPECIAL_RE = re.compile(
+    r"[+-]?(?:NaN|Infinity)\Z|(?i:[+-]?inf(?:inity)?|nan)\Z")
+_TRIM = "".join(map(chr, range(0x21)))
+
+
+def _number_like_spark(text: str | None, integral: bool):
+    """The ONE string → number rule of Spark's cast, shared by the
+    try-cast twins (malformed → NULL) and the ANSI-cast twin (malformed
+    → raise): ASCII digits only — no Unicode digits, no Unicode spaces,
+    no ``_`` separators, all of which Python's ``int``/``float`` accept
+    — and no fraction or exponent for an integral cast.  Returns the
+    int (unranged) or float, or None when malformed.  Verified against
+    the engine by tests/test_loopback.py (the fold and cast-parity
+    tests) and tests/test_consume.py::test_consume_udtf_quirk_values_parity."""
+    if text is None:
+        return None
+    if integral:
+        s = text.strip(_TRIM + "\x7f")
+        return int(s) if _INTEGRAL_RE.match(s) else None
+    s = text.strip(_TRIM)
+    if m := _DECIMAL_RE.match(s):
+        return float(m.group(1))
+    if m := _HEX_RE.match(s):
+        return float.fromhex(m.group(1))
+    return float(s) if _SPECIAL_RE.match(s) else None
+
+
 def _cast_like_spark(got: str | None, cast: str):
     """Mirror Spark's ANSI cast of get_json_object's STRING extraction:
     integral-only for int (a fractional, boolean, or non-numeric
@@ -372,11 +397,36 @@ def _cast_like_spark(got: str | None, cast: str):
     translate_sql_filter's cast-parity note), numeric strings for
     double.  Returns the number, or raises ValueError exactly where the
     engine's cast would."""
-    try:
-        # int() rejects '12.5'/'12.0'/'true' like UTF8String.toIntExact
-        return int(got) if cast == "int" else float(got)
-    except (ValueError, TypeError):
-        raise ValueError(f"CAST_INVALID_INPUT: {got!r} as {cast}") from None
+    v = _number_like_spark(got, cast == "int")
+    if v is None:
+        raise ValueError(f"CAST_INVALID_INPUT: {got!r} as {cast}")
+    return v
+
+
+def _try_cast_like_spark(got: str | None, code: str):
+    """Mirror ``try_cast(<string> AS <type>)`` for a ``-c`` type code
+    (mappings.TYPE_CODES): ``i``/``l`` integral in int32/int64 range,
+    ``f`` narrowed to float32 (overflow → inf, like the engine), ``d``
+    double, ``t`` an ISO-8601 timestamp, anything else the string
+    itself; malformed → None."""
+    if got is None or code not in ("i", "l", "f", "d", "t"):
+        return got
+    if code == "t":
+        import datetime as dt
+
+        try:
+            return dt.datetime.fromisoformat(
+                got.replace("Z", "+00:00")
+            ).replace(tzinfo=None)
+        except ValueError:
+            return None
+    v = _number_like_spark(got, code in ("i", "l"))
+    if v is None:
+        return None
+    if code in ("i", "l"):
+        bound = 1 << (31 if code == "i" else 63)
+        return v if -bound <= v < bound else None
+    return struct.unpack("f", struct.pack("f", v))[0] if code == "f" else v
 
 
 def _apply_server_filter(tbl, flt: dict):
@@ -626,28 +676,6 @@ def _translate_sql_map(expr: str) -> dict | None:
     return None
 
 
-def _try_cast_long(got: str | None) -> int | None:
-    """Mirror Spark's ``try_cast(<string> AS long)`` (the aggregate
-    kind's payload read, transforms.py:160): trim characters <= U+0020
-    from both ends, then an optional single sign and >= 1 ASCII digits,
-    in int64 range — anything else (fractional '12.5', '1e3', 'true',
-    Unicode digits, embedded sign/space, overflow) is NULL.  Verified
-    against the engine in test_fold_cast_matches_try_cast_long."""
-    if got is None:
-        return None
-    i, j = 0, len(got)
-    while i < j and got[i] <= " ":
-        i += 1
-    while j > i and got[j - 1] <= " ":
-        j -= 1
-    s = got[i:j]
-    body = s[1:] if s[:1] in ("+", "-") else s
-    if not body or any(c < "0" or c > "9" for c in body):
-        return None
-    v = int(s)
-    return v if -(1 << 63) <= v < (1 << 63) else None
-
-
 def _to_json_like_spark(fields: list[tuple[str, str | None]]) -> str:
     """Mirror ``to_json(struct(...))`` over string fields: compact,
     field order preserved, NULL fields OMITTED (Spark's default
@@ -769,7 +797,9 @@ def _apply_server_chain(tbl, chain: list[dict]):
             total: int | None = None
             new = []
             for v in tbl["value"].to_pylist():
-                k = _try_cast_long(_extract_like_get_json_object(v, path))
+                k = _try_cast_like_spark(
+                    _extract_like_get_json_object(v, path), "l"
+                )
                 if k is not None:
                     total = (total or 0) + k
                 new.append(None if total is None else str(init + total))

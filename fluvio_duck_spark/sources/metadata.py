@@ -48,14 +48,9 @@ def fluvio_topics(
     asks the loopback record server instead (sources/loopback.py) —
     an actual RPC, the second transport of CONNECTOR.md's parity gate."""
     if log_dir is not None or server is not None:
-        if server is not None:
-            from fluvio_duck_spark.sources.loopback import server_parts
+        from fluvio_duck_spark.sources.pplog import pp_partition_leos
 
-            n = len(server_parts(server))
-        else:
-            from fluvio_duck_spark.sources.pplog import pp_partition_dirs
-
-            n = len(pp_partition_dirs(log_dir))
+        n = len(pp_partition_leos(log_dir, server))
         schema = T.StructType([
             T.StructField("name", T.StringType(), False),
             T.StructField("partitions", T.IntegerType(), False),
@@ -95,21 +90,12 @@ def fluvio_partitions(
     (sources/loopback.py) — the per-partition LEOs travel over an
     actual RPC, the second transport of CONNECTOR.md's parity gate."""
     if log_dir is not None or server is not None:
-        if server is not None:
-            from fluvio_duck_spark.sources.loopback import server_parts
+        from fluvio_duck_spark.sources.pplog import pp_partition_leos
 
-            leos = sorted(server_parts(server).items())
-        else:
-            from fluvio_duck_spark.sources.pplog import (
-                pp_footer_leo,
-                pp_partition_dirs,
-            )
-
-            leos = [
-                (pid, pp_footer_leo(d))
-                for pid, d in sorted(pp_partition_dirs(log_dir).items())
-            ]
-        rows = [(topic, str(pid), leo) for pid, leo in leos]
+        rows = [
+            (topic, str(pid), leo)
+            for pid, leo in pp_partition_leos(log_dir, server).items()
+        ]
         schema = T.StructType([
             T.StructField("topic", T.StringType(), False),
             T.StructField("partition", T.StringType(), False),

@@ -224,8 +224,7 @@ def write_pp_array_log_dir(
 
 def pp_partition_dirs(log_dir: str) -> dict[int, str]:
     """partition id → fragment directory of a per-partition log
-    (``partition=<k>/`` layout, :func:`write_pp_log_dir`).  Shared by the
-    DataSource batch/stream planners and the metadata scan — one
+    (``partition=<k>/`` layout, :func:`write_pp_log_dir`) — one
     definition of "what partitions does this log have"."""
     import glob
     import re
@@ -242,24 +241,45 @@ def pp_partition_dirs(log_dir: str) -> dict[int, str]:
     return out
 
 
-def pp_footer_leo(part_dir: str) -> int:
-    """One partition log's LEO from its fragments' parquet footer
-    statistics — the per-replica leo read of reference
+def pp_footer_leo(path: str, column: str = "offset") -> int:
+    """The LEO of one offset-sequenced parquet log — a partition log's
+    directory, or the stand-in's ``events.parquet`` file or directory
+    with ``column="event_id"`` — from its fragments' footer statistics
+    (row-group max + 1): the per-replica leo read of reference
     src/partition.rs:131.  Metadata-only: footers are parsed, no row
     group is decoded."""
     import glob
 
     import pyarrow.parquet as pq
 
+    frags = ([path] if os.path.isfile(path)
+             else sorted(glob.glob(os.path.join(path, "*.parquet"))))
     leo = -1
-    for frag in sorted(glob.glob(os.path.join(part_dir, "*.parquet"))):
+    for frag in frags:
         pf = pq.ParquetFile(frag)
-        idx = pf.schema_arrow.get_field_index("offset")
+        idx = pf.schema_arrow.get_field_index(column)
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(idx).statistics
             if st is not None and st.max is not None:
                 leo = max(leo, int(st.max))
     return leo + 1
+
+
+def pp_partition_leos(log_dir: str | None = None,
+                      server: str | None = None) -> dict[int, int]:
+    """partition id → LEO of a per-partition log, in partition order:
+    the record server's metadata RPC when ``server`` is set
+    (sources/loopback.py), else each ``partition=<k>`` directory's
+    footer statistics.  The plan-time metadata read of both DataSource
+    readers, the metadata scans and the record server itself."""
+    if server is not None:
+        from fluvio_duck_spark.sources.loopback import server_parts
+
+        return dict(sorted(server_parts(server).items()))
+    return {
+        pid: pp_footer_leo(d)
+        for pid, d in sorted(pp_partition_dirs(log_dir).items())
+    }
 
 
 #: DuckDB twin of ``per_partition_log`` — keep the two derivations in

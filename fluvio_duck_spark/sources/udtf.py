@@ -29,10 +29,13 @@ reference src/consume.rs:184-187,:607-637) — so
     SELECT * FROM fluvio_consume('events -B -c k:i=k')
 
 binds natively with columns (k INT), no textual rewrite.  The UDTF
-worker replays the builder's bounded GLOBAL offset algebra over the
-same stand-in (pyarrow scan, single worker) — the right shape for the
-ad-hoc bounded reads this SQL form serves, while data-sized pipelines
-keep using the builder; ``consume_udtf_mapped`` (driver-checked) and
+worker plans and reads through the batch DataSource reader
+(sources/datasource.py::FluvioReader — same offset windows, same
+row-group-pruned fetch, single worker) and maps ``-c`` columns with the
+record server's engine-verified get_json_object / try_cast twins
+(sources/loopback.py) — the right shape for the ad-hoc bounded reads
+this SQL form serves, while data-sized pipelines keep using the
+builder; ``consume_udtf_mapped`` (oracle-checked) and
 ``test_consume.py``'s parity matrix pin UDTF rows == builder rows.
 """
 
@@ -52,14 +55,14 @@ class FluvioTopicsUDTF:
         # per-row Python loop; a real connector replaces this whole body
         # with one metadata-sized admin RPC
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        from fluvio_duck_spark.sources.datasource import _standin_partition
 
         t = pq.read_table(
             f"{sf_dir}/events.parquet", columns=["event_type", "user_id"]
         )
-        # user_id % 4 == user_id & 3 on the fixture's non-negative ids
-        part = pc.bit_wise_and(t.column("user_id"), 3)
+        part = _standin_partition(t.column("user_id"))
         g = (
             pa.table({"name": t.column("event_type"), "part": part})
             .group_by("name")
@@ -84,8 +87,9 @@ class FluvioPartitionsUDTF:
         # vectorized pyarrow group_by (VERDICT r12 #7) — see
         # FluvioTopicsUDTF.eval; LEO = max(offset) + 1 per (topic, part)
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        from fluvio_duck_spark.sources.datasource import _standin_partition
 
         t = pq.read_table(
             f"{sf_dir}/events.parquet",
@@ -94,7 +98,7 @@ class FluvioPartitionsUDTF:
         g = (
             pa.table({
                 "name": t.column("event_type"),
-                "part": pc.bit_wise_and(t.column("user_id"), 3),
+                "part": _standin_partition(t.column("user_id")),
                 "off": t.column("event_id"),
             })
             .group_by(["name", "part"])
@@ -116,7 +120,7 @@ class FluvioConsumeUDTF:
     SQL table function: ``analyze()`` binds the option string to its
     output schema (default ``offset/timestamp/value`` or the typed
     ``-c`` mappings — reference src/consume.rs:607-637,:223-245), then
-    ``eval()`` replays the builder's bounded global offset algebra.
+    ``eval()`` reads the batch reader's plan and maps each record.
 
     Scope (documented): the SmartModule transform chain stays on the
     builder / ``consume_sql`` path (it must run distributed); an option
@@ -177,148 +181,41 @@ class FluvioConsumeUDTF:
         return AnalyzeResult(schema=schema)
 
     def eval(self, opts: str, sf_dir: str | None = None):  # noqa: D102
-        import datetime as dt
-        import json
+        import dataclasses
 
-        import pyarrow.parquet as pq
-
-        from fluvio_duck_spark.mappings import (
-            json_path_expr,
-            parse_column_spec,
-        )
+        from fluvio_duck_spark.mappings import json_path_expr
         from fluvio_duck_spark.options import parse_consume_opts
-        from fluvio_duck_spark.sources.consume import (
-            DEFAULT_SF_DIR,
-            STANDIN_PARTITIONS,
-            _WHOLE_LOG_TOPICS,
+        from fluvio_duck_spark.sources.consume import DEFAULT_SF_DIR
+        from fluvio_duck_spark.sources.datasource import FluvioReader
+        from fluvio_duck_spark.sources.loopback import (
+            _parse_json,
+            _try_cast_like_spark,
+            _walk_like_get_json_object,
         )
 
         o = parse_consume_opts(opts)
-        sf = sf_dir or DEFAULT_SF_DIR
-        t = pq.read_table(
-            f"{sf}/events.parquet",
-            columns=["event_id", "ts", "user_id", "props", "event_type"],
-        )
-        # mirror read_events: nanos fixtures truncate ns→µs (integer
-        # div), micros fixtures pass through
-        raw = t.column("ts").cast("int64").to_pylist()
-        if t.column("ts").type.unit == "ns":
-            us = [v // 1000 for v in raw]
-        else:
-            us = raw
-        rows = [
-            (eid, u, uid % STANDIN_PARTITIONS, props, etype)
-            for eid, u, uid, props, etype in zip(
-                t.column("event_id").to_pylist(), us,
-                t.column("user_id").to_pylist(),
-                t.column("props").to_pylist(),
-                t.column("event_type").to_pylist(),
+        tbl = FluvioReader(
+            {"topic": o.topic, "sf_dir": sf_dir or DEFAULT_SF_DIR},
+            dataclasses.replace(o, columns=[]),
+        ).table()
+        if not o.columns:
+            yield from zip(
+                tbl["offset"].to_pylist(),
+                tbl["timestamp"].to_pylist(),
+                tbl["value"].to_pylist(),
             )
+            return
+        # each payload is parsed ONCE and every -c path walks the parse
+        specs = [
+            (json_path_expr(path)[2:], name_spec.partition(":")[2])
+            for name_spec, path in o.columns
         ]
-        if o.topic not in _WHOLE_LOG_TOPICS:
-            rows = [r for r in rows if r[4] == o.topic]
-        if not o.all_partitions:
-            rows = [r for r in rows if r[2] == o.partition]
-        # global offset algebra, mirroring the builder's bounded branch
-        leo = max((r[0] for r in rows), default=-1) + 1
-        start = o.calculate_start()
-        if start.kind == "beginning":
-            lo = 0
-        elif start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind == "tail":
-            lo = max(0, leo - start.n)
-        else:  # end — bounded read from the log end is empty
-            lo = leo
-        rows = [r for r in rows if r[0] >= lo]
-        if o.end is not None:
-            rows = [r for r in rows if r[0] <= o.end]
-        rows.sort(key=lambda r: r[0])
-        if o.rows is not None:
-            rows = rows[: o.rows]
-
-        epoch = dt.datetime(1970, 1, 1)
-
-        def leaf(doc, parts: list[str]):
-            """get_json_object twin: dot-path walk over the already-parsed
-            document, leaf as token text, non-leaf re-serialized compact,
-            JSON null/missing → None.  The document is parsed ONCE per row
-            (guide §4.2 per-row work: n mapped columns share one parse)
-            and the dot-path split once per bind."""
-            cur = doc
-            for part in parts:
-                if isinstance(cur, dict) and part in cur:
-                    cur = cur[part]
-                else:
-                    return None
-            if cur is None:
-                return None
-            if isinstance(cur, bool):
-                return "true" if cur else "false"
-            if isinstance(cur, (dict, list)):
-                return json.dumps(cur, separators=(",", ":"))
-            return str(cur)
-
-        import re as _re
-
-        _INT_RE = _re.compile(r"[+-]?\d+\Z")
-
-        def cast(tok, code: str):
-            """try_cast twin: malformed → None, never an error.  Integral
-            codes mirror Spark's string→int try_cast exactly: optional
-            sign + digits only after whitespace trim — a decimal string
-            like '12.7' is NULL (r13: the twin previously truncated it,
-            matching neither Spark nor DuckDB; fixtures never hit it,
-            test_consume_udtf_quirk_values_parity pins it now)."""
-            if tok is None:
-                return None
-            try:
-                if code in ("i", "l"):
-                    t = tok.strip()
-                    # int() alone would accept '1_0' etc. — Spark doesn't
-                    if not _INT_RE.match(t):
-                        return None
-                    v = int(t)
-                    bound = 2**31 if code == "i" else 2**63
-                    return v if -bound <= v < bound else None
-                if code in ("f", "d"):
-                    import struct
-
-                    if "_" in tok:  # float('1_0') parses, try_cast NULLs
-                        return None
-                    v = float(tok)
-                    if code == "f":
-                        v = struct.unpack("f", struct.pack("f", v))[0]
-                    return v
-                if code == "t":
-                    return dt.datetime.fromisoformat(
-                        tok.replace("Z", "+00:00")
-                    ).replace(tzinfo=None)
-            except (ValueError, ArithmeticError, OverflowError):
-                return None
-            return tok  # 's' and unknown codes stay string
-
-        if o.columns:
-            specs = [
-                (
-                    parse_column_spec(ns_)[0],
-                    ns_.partition(":")[2] or "s",
-                    json_path_expr(p)[2:].split("."),
-                )
-                for ns_, p in o.columns
-            ]
-            for r in rows:
-                try:
-                    doc = json.loads(r[3])
-                except (TypeError, ValueError):
-                    doc = None
-                yield tuple(
-                    cast(leaf(doc, parts) if doc is not None else None, code)
-                    for _n, code, parts in specs
-                )
-        else:
-            for r in rows:
-                yield r[0], epoch + dt.timedelta(microseconds=r[1]), r[3]
+        for value in tbl["value"].to_pylist():
+            doc = _parse_json(value)
+            yield tuple(
+                _try_cast_like_spark(_walk_like_get_json_object(doc, path), code)
+                for path, code in specs
+            )
 
 
 def register_sql_table_functions(spark) -> None:

@@ -34,7 +34,11 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from fluvio_duck_spark.mappings import project
 from fluvio_duck_spark.options import ConsumeOptError, ConsumeOptions, parse_consume_opts
-from fluvio_duck_spark.sources.consume import DEFAULT_SF_DIR, STANDIN_PARTITIONS
+from fluvio_duck_spark.sources.consume import (
+    DEFAULT_SF_DIR,
+    STANDIN_PARTITIONS,
+    _WHOLE_LOG_TOPICS,
+)
 from fluvio_duck_spark.transforms import apply_transform_chain, load_transform_chain
 
 def _events_schema(spark: SparkSession, path: str):
@@ -88,7 +92,7 @@ def record_log_stream(
     """readStream over the events fixture, normalized to the record shape
     (offset, timestamp, partition, value) used by the batch source."""
     events = event_stream(spark, sf_dir)
-    if topic not in ("events", "*"):
+    if topic not in _WHOLE_LOG_TOPICS:
         events = events.filter(F.col("event_type") == topic)
     return events.select(
         F.col("event_id").cast(T.LongType()).alias("offset"),

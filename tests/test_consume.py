@@ -760,6 +760,12 @@ def test_consume_udtf_quirk_values_parity(spark, tmp_path):
         '{"k": "3.5e300"}',                   # float overflow -> f NULL
         '{"other": 1}',                       # missing key
         '{"k": "-12"}',                       # negative in-range int
+        '{"k": "\u0661\u0662"}',              # Arabic-Indic digits -> NULL
+        '{"k": "\u00a012"}',                  # NBSP-prefixed -> NULL
+        '{"k": "\u2003\u20037"}',             # em-space-prefixed -> NULL
+        '{"k": 1e7}',                         # number as string: '1.0E7'
+        '{"k": {"n": "\u00e9"}}',             # non-ASCII nested object
+        '{"k": "1_0"}',                       # '_' separator -> NULL
     ]
     ts0 = dt.datetime(2024, 1, 1)
     rows = [

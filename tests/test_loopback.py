@@ -379,8 +379,12 @@ def test_server_framed_errors_and_cast_parity(server):
         flt_i,
     )
     assert ok["offset"].to_pylist() == [0, 1]
+    # Unicode digits, Unicode spaces and '_' separators are malformed
+    # under both casts (Python's int()/float() would accept them)
+    unicode_bad = ('{"k": "\u0661\u0662"}', '{"k": "\u00a012"}',
+                   '{"k": "\u2003\u20037"}', '{"k": "1_0"}')
     for bad in ('{"k": 12.5}', '{"k": 12.0}', '{"k": true}', '{"k": "12.5"}',
-                '{"k": "abc"}', '{"k": [1]}'):
+                '{"k": "abc"}', '{"k": [1]}') + unicode_bad:
         with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
             _apply_server_filter(tbl(bad), flt_i)
     # double cast accepts numerics (incl. fractional), throws on booleans
@@ -388,8 +392,9 @@ def test_server_framed_errors_and_cast_parity(server):
     got = _apply_server_filter(tbl('{"k": 12.5}', '{"k": 9}', '{"k": "11"}'),
                                flt_dd)
     assert got["offset"].to_pylist() == [0, 2]
-    with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
-        _apply_server_filter(tbl('{"k": false}'), flt_dd)
+    for bad in ('{"k": false}',) + unicode_bad:
+        with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
+            _apply_server_filter(tbl(bad), flt_dd)
 
 
 def test_concurrent_producers_dense_gapless(tmp_path):
@@ -807,6 +812,50 @@ def test_fold_cast_matches_try_cast_long(spark):
     assert folded["value"].to_pylist() == engine
 
 
+def test_number_rule_matches_engine_casts(spark):
+    """The one string -> number rule behind the SQL table function's -c
+    casts, the fold's try_cast and the pushed filter's ANSI cast
+    (loopback._number_like_spark), checked value by value against the
+    engine's try_cast to int/bigint/float/double: Unicode digits and
+    spaces, '_' separators, f/d suffixes, hex floats, the special
+    literals, the integral-only DEL trim, range and float32 overflow.
+    The ANSI twin raises exactly where the engine's try_cast is NULL."""
+    import math
+
+    from fluvio_duck_spark.sources.loopback import (
+        _cast_like_spark,
+        _try_cast_like_spark,
+    )
+
+    vals = [
+        "12", " 12", "\u00a012", "\u2003\u20037", "\u0661\u0662", "1_0",
+        "+12", "-0", "0012", "12.0", "12.5", "1e3", ".5", "5.", "1.5d",
+        "1.5F", "1d", "0x1p3", "inf", "-Infinity", "NaN", "nan", "+nan",
+        "-NaN", "INF", "Infinityd", "\x7f12", "\t12\n", "\x0012", "3.5e300",
+        "1e-50", "1e400", "", " ", "+", "1e", "1.2.3", "- 12", "12L",
+        "1,000", "99999999999", "9223372036854775808", "\u206012",
+    ]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, s string")
+    rows = df.selectExpr(
+        "i", "try_cast(s AS int)", "try_cast(s AS bigint)",
+        "try_cast(s AS float)", "try_cast(s AS double)",
+    ).orderBy("i").collect()
+
+    def same(a, b):
+        return a == b or (isinstance(a, float) and isinstance(b, float)
+                          and math.isnan(a) and math.isnan(b))
+
+    for r in rows:
+        v = vals[r[0]]
+        for code, want in zip("ilfd", r[1:]):
+            assert same(_try_cast_like_spark(v, code), want), (v, code, want)
+        if r[4] is None:
+            with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
+                _cast_like_spark(v, "double")
+        else:
+            assert same(_cast_like_spark(v, "double"), r[4]), v
+
+
 def test_fold_pushdown_plans_one_task_per_partition(server):
     """A pushed fold is prefix-stateful within the partition window, so
     the batch plan must pin ONE task per partition — even when an
@@ -833,7 +882,7 @@ def test_fold_pushdown_plans_one_task_per_partition(server):
     assert len(whole) == n_parts  # ...until a fold is pushed
     spans = sorted((p.pid, p.lo, p.hi) for p in whole)
     leos = server_parts(server.address)
-    assert spans == [(pid, 0, leo - 1) for pid, leo in sorted(leos.items())]
+    assert spans == [(pid, 0, leo) for pid, leo in sorted(leos.items())]
 
 
 def test_stream_rejects_fold_chain(server):

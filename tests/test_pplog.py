@@ -92,19 +92,30 @@ def test_pinned_missing_partition_is_empty(spark, log_dir):
     assert _ds(spark, log_dir, "-p 9 -B").count() == 0
 
 
-def test_footer_leo_matches_data(spark, log_dir):
-    from fluvio_duck_spark.options import parse_consume_opts
-    from fluvio_duck_spark.sources.datasource import FluvioReader
+def test_footer_leo_matches_data(spark, log_dir, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    reader = FluvioReader({"log_dir": log_dir, "args": "-A -B"})
-    dirs = reader._pp_partition_dirs()
+    from fluvio_duck_spark.sources.pplog import pp_footer_leo, pp_partition_leos
+
     counts = {
         r["partition"]: r["n"]
         for r in _ds(spark, log_dir, "-A -B --rows 1000000")
         .groupBy("partition").agg(F.count("*").alias("n")).collect()
     }
-    for pid, d in dirs.items():
-        assert reader._pp_footer_leo(d) == counts[pid]
+    assert pp_partition_leos(log_dir) == counts
+
+    # sf_dir layout: events.parquet as a multi-file directory, several
+    # row groups per file, offsets out of file order — the footer LEO
+    # is max(event_id) + 1 over every fragment
+    ev = tmp_path / "events.parquet"
+    ev.mkdir()
+    for i, ids in enumerate(([5, 9, 2], [40, 17], [11])):
+        pq.write_table(
+            pa.table({"event_id": pa.array(ids, pa.int64())}),
+            str(ev / f"part-{i}.parquet"), row_group_size=2,
+        )
+    assert pp_footer_leo(str(ev), "event_id") == 40 + 1
 
 
 def _fetch_range(reader, start: dict, end: dict) -> list[tuple]:
@@ -429,8 +440,8 @@ def test_batch_reader_chunks_partition_windows(spark, log_dir):
         spans.setdefault(p.pid, []).append((p.lo, p.hi))
     for pid, leo in leos.items():
         tiles = sorted(spans[pid])
-        assert tiles[0][0] == 0 and tiles[-1][1] == leo - 1
-        assert all(b[0] == a[1] + 1 for a, b in zip(tiles, tiles[1:]))
+        assert tiles[0][0] == 0 and tiles[-1][1] == leo
+        assert all(b[0] == a[1] for a, b in zip(tiles, tiles[1:]))
 
     # pp mode: a pinned --rows is ARITHMETIC (dense offsets → exact
     # window), so it chunks like any window and still reads exactly 7
