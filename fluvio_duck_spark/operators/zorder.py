@@ -117,6 +117,7 @@ def write_zordered_exact_partitioned(
     dims,
     file_shift: int = 8,
     mode: str = "overwrite",
+    dynamic: bool = False,
 ) -> None:
     """Partitioned exact-Z-order write with DETERMINISTIC file
     boundaries: within each ``part_col`` table partition, rows land in
@@ -129,7 +130,9 @@ def write_zordered_exact_partitioned(
     incremental maintenance (:func:`refresh_zordered_partitioned`)
     provably equivalent to a full rewrite, file boundary for file
     boundary.  Rows are z-sorted within each file for tight row-group
-    stats."""
+    stats.  ``dynamic`` makes an overwrite replace only the table
+    partitions present in ``df`` (a per-write option; the session's
+    ``partitionOverwriteMode`` is left alone)."""
     from fluvio_duck_spark.operators.layout import zorder_key as exact_key
 
     cols = [F.col(d) if isinstance(d, str) else d for d in dims]
@@ -151,6 +154,7 @@ def write_zordered_exact_partitioned(
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(mode)
+        .options(**({"partitionOverwriteMode": "dynamic"} if dynamic else {}))
         .partitionBy(part_col, "__zfile")
         .parquet(path)
     )
@@ -190,14 +194,9 @@ def refresh_zordered_partitioned(
         .drop("__zfile")
     )
     merged = existing.unionByName(delta.select(*existing.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        write_zordered_exact_partitioned(
-            merged, path, part_col, dims, file_shift, mode="overwrite"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_zordered_exact_partitioned(
+        merged, path, part_col, dims, file_shift, mode="overwrite", dynamic=True
+    )
     return dirty
 
 

@@ -4029,21 +4029,19 @@ def q_join_not_in_nullaware(spark: SparkSession, sf_dir: str) -> DataFrame:
     when any NULL exists, which the fixture guarantees).  Catalyst plans
     the raw form as NullAwareAntiJoin; both come back exact."""
     ev = load(spark, sf_dir, "orders")
-    cu = load(spark, sf_dir, "customer")
-    ev.select(
+    probe_keys = ev.select(
         F.when(F.col("o_orderkey") % 10 == 0, F.lit(None))
         .otherwise(F.col("o_custkey")).alias("k")
-    ).createOrReplaceTempView("_probe_keys")
-    cu.createOrReplaceTempView("_cust")
+    )
     return spark.sql("""
         SELECT
-          (SELECT COUNT(*) FROM _cust
-           WHERE c_custkey NOT IN (SELECT k FROM _probe_keys WHERE k IS NOT NULL))
+          (SELECT COUNT(*) FROM {cu}
+           WHERE c_custkey NOT IN (SELECT k FROM {pk} WHERE k IS NOT NULL))
             AS n_not_in,
-          (SELECT COUNT(*) FROM _cust
-           WHERE c_custkey NOT IN (SELECT k FROM _probe_keys))
+          (SELECT COUNT(*) FROM {cu}
+           WHERE c_custkey NOT IN (SELECT k FROM {pk}))
             AS n_not_in_raw
-    """)
+    """, pk=probe_keys, cu=load(spark, sf_dir, "customer"))
 
 
 ORACLE_NOT_IN_NULLAWARE = """

@@ -246,10 +246,9 @@ def translate_sql_filter(where: str) -> dict | None:
     m = _FILTER_RE.match(where)
     if not m:
         return None
-    path, typ, op, lit = m.groups()
-    typ = typ.lower()
-    cast = "double" if typ == "double" else "int"
-    if cast == "int":
+    path, cast, op, lit = m.groups()
+    cast = cast.lower()
+    if cast != "double":
         if "." in lit:
             return None  # int(float('50.5')) would truncate the predicate
         value = int(lit)
@@ -390,14 +389,18 @@ def _number_like_spark(text: str | None, integral: bool):
     return float(s) if _SPECIAL_RE.match(s) else None
 
 
+#: The filter DSL's casts as ``-c`` type codes (mappings.TYPE_CODES).
+_FILTER_CASTS = {"int": "i", "bigint": "l", "double": "d"}
+
+
 def _cast_like_spark(got: str | None, cast: str):
     """Mirror Spark's ANSI cast of get_json_object's STRING extraction:
-    integral-only for int (a fractional, boolean, or non-numeric
-    extraction THROWS engine-side, so it throws here too — see
-    translate_sql_filter's cast-parity note), numeric strings for
-    double.  Returns the number, or raises ValueError exactly where the
-    engine's cast would."""
-    v = _number_like_spark(got, cast == "int")
+    integral-only for ``int`` (int32) and ``bigint`` (int64) — a
+    fractional, boolean, non-numeric or out-of-range extraction THROWS
+    engine-side, so it throws here too (see translate_sql_filter's
+    cast-parity note) — numeric strings for ``double``.  Returns the
+    number, or raises ValueError exactly where the engine's cast would."""
+    v = _try_cast_like_spark(got, _FILTER_CASTS[cast])
     if v is None:
         raise ValueError(f"CAST_INVALID_INPUT: {got!r} as {cast}")
     return v
@@ -407,19 +410,12 @@ def _try_cast_like_spark(got: str | None, code: str):
     """Mirror ``try_cast(<string> AS <type>)`` for a ``-c`` type code
     (mappings.TYPE_CODES): ``i``/``l`` integral in int32/int64 range,
     ``f`` narrowed to float32 (overflow → inf, like the engine), ``d``
-    double, ``t`` an ISO-8601 timestamp, anything else the string
-    itself; malformed → None."""
+    double, ``t`` a timestamp (:func:`_timestamp_like_spark`), anything
+    else the string itself; malformed → None."""
     if got is None or code not in ("i", "l", "f", "d", "t"):
         return got
     if code == "t":
-        import datetime as dt
-
-        try:
-            return dt.datetime.fromisoformat(
-                got.replace("Z", "+00:00")
-            ).replace(tzinfo=None)
-        except ValueError:
-            return None
+        return _timestamp_like_spark(got)
     v = _number_like_spark(got, code in ("i", "l"))
     if v is None:
         return None
@@ -427,6 +423,76 @@ def _try_cast_like_spark(got: str | None, code: str):
         bound = 1 << (31 if code == "i" else 63)
         return v if -bound <= v < bound else None
     return struct.unpack("f", struct.pack("f", v))[0] if code == "f" else v
+
+
+#: Spark's string → timestamp grammar after trimming U+0000-U+0020 and
+#: U+007F: a 4-6 digit year with an optional sign, then optional
+#: ``-m[m]``, ``-d[d]``, ``[ T]h[h]``, ``:m[m]``, ``:s[s]``, ``.fraction``
+#: (digits past the sixth are truncated) and, after the seconds only, a
+#: zone.
+_TIMESTAMP_RE = re.compile(
+    r"([+-]?[0-9]{4,6})(?:-([0-9]{1,2})(?:-([0-9]{1,2})(?:[ T]([0-9]{1,2})"
+    r"(?::([0-9]{1,2})(?::([0-9]{1,2})(?:\.([0-9]*))?([^0-9].*)?)?)?)?)?)?\Z",
+    re.DOTALL)
+_OFFSET_RE = re.compile(
+    r"([+-])([0-9]{2})(?:([0-9]{2})([0-9]{2})?|:([0-9]{2})(?::([0-9]{2}))?)?\Z")
+
+
+def _zone_like_spark(zone: str):
+    """Java's ``ZoneId.of`` after Spark's ``[+-]h:`` and ``[+-]hh:m``
+    rewrites: ``Z``, an offset of at most 18 hours, ``UTC``/``GMT``/``UT``
+    with an optional offset, or a tz-database region; None otherwise.
+    Java's three-letter short IDs (``PST``) are not mirrored."""
+    import datetime as dt
+
+    zone = re.sub(r"([+-])([0-9]):", r"\g<1>0\2:", zone.strip(_TRIM), count=1)
+    zone = re.sub(r"([+-][0-9]{2}):([0-9])\Z", r"\1:0\2", zone)
+    prefix = re.match(r"(?:UTC|GMT|UT)(?=[+-]|\Z)", zone)
+    offset = zone[prefix.end():] if prefix else zone
+    if offset in ("", "Z"):
+        return dt.timezone.utc
+    if offset[0] not in "+-":
+        import zoneinfo
+
+        try:
+            return zoneinfo.ZoneInfo(zone)
+        except (KeyError, ValueError, OSError):
+            return None
+    if len(offset) == 2:
+        offset = offset[0] + "0" + offset[1]
+    m = _OFFSET_RE.match(offset)
+    if not m:
+        return None
+    sign, hh, mm1, ss1, mm2, ss2 = m.groups()
+    h, mi, sec = int(hh), int(mm1 or mm2 or 0), int(ss1 or ss2 or 0)
+    total = h * 3600 + mi * 60 + sec
+    if h > 18 or mi > 59 or sec > 59 or total > 18 * 3600:
+        return None
+    return dt.timezone(dt.timedelta(seconds=-total if sign == "-" else total))
+
+
+def _timestamp_like_spark(text: str):
+    """Mirror ``try_cast(<string> AS timestamp)`` in a UTC session as a
+    naive UTC datetime: compact dates (``20240101``) and a zone before
+    the seconds are NULL, one-digit month/day/time fields are read, and
+    a zone is applied, not dropped.  Not mirrored (NULL here): time-only
+    strings, which the engine dates today, and years outside 1-9999."""
+    import datetime as dt
+
+    m = _TIMESTAMP_RE.match(text.strip(_TRIM + "\x7f"))
+    if not m:
+        return None
+    y, mo, d, h, mi, sec, frac, zone = m.groups()
+    tz = dt.timezone.utc if zone is None else _zone_like_spark(zone)
+    if tz is None:
+        return None
+    try:
+        ts = dt.datetime(int(y), int(mo or 1), int(d or 1), int(h or 0),
+                         int(mi or 0), int(sec or 0),
+                         int((frac or "")[:6].ljust(6, "0")), tz)
+        return ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    except (ValueError, OverflowError):
+        return None
 
 
 def _apply_server_filter(tbl, flt: dict):

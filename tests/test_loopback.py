@@ -5,6 +5,7 @@ plan" step 4."""
 
 from __future__ import annotations
 
+import datetime as dt
 import time
 
 import pytest
@@ -383,10 +384,20 @@ def test_server_framed_errors_and_cast_parity(server):
     # under both casts (Python's int()/float() would accept them)
     unicode_bad = ('{"k": "\u0661\u0662"}', '{"k": "\u00a012"}',
                    '{"k": "\u2003\u20037"}', '{"k": "1_0"}')
-    for bad in ('{"k": 12.5}', '{"k": 12.0}', '{"k": true}', '{"k": "12.5"}',
-                '{"k": "abc"}', '{"k": [1]}') + unicode_bad:
+    # out of range for the cast's width: int32 for int, int64 for bigint
+    flt_l = dict(flt_i, cast="bigint")
+    assert translate_sql_filter(
+        "cast(get_json_object(value, '$.k') as bigint) >= 5"
+    ) == flt_l
+    assert _apply_server_filter(
+        tbl('{"k": "99999999999"}', '{"k": 3}'), flt_l
+    )["offset"].to_pylist() == [0]
+    for bad, flt in [(b, flt_i) for b in (
+            '{"k": 12.5}', '{"k": 12.0}', '{"k": true}', '{"k": "12.5"}',
+            '{"k": "abc"}', '{"k": [1]}', '{"k": "99999999999"}')
+            + unicode_bad] + [('{"k": "9223372036854775808"}', flt_l)]:
         with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
-            _apply_server_filter(tbl(bad), flt_i)
+            _apply_server_filter(tbl(bad), flt)
     # double cast accepts numerics (incl. fractional), throws on booleans
     flt_dd = {"path": "$.k", "cast": "double", "op": ">", "value": 10.0}
     got = _apply_server_filter(tbl('{"k": 12.5}', '{"k": 9}', '{"k": "11"}'),
@@ -812,6 +823,48 @@ def test_fold_cast_matches_try_cast_long(spark):
     assert folded["value"].to_pylist() == engine
 
 
+def test_timestamp_twin_matches_try_cast_timestamp(spark):
+    """The SQL table function's ``-c name:t=path`` twin
+    (loopback._timestamp_like_spark) against the engine's
+    ``try_cast(... AS timestamp)`` in the UTC session, value by value:
+    a UTC offset is applied (not dropped), a compact date is NULL, a
+    one-digit month and day are read, plus the grammar's edges (trim,
+    partial dates and times, fraction truncation, zone forms, field
+    ranges, DST gap and overlap)."""
+    from fluvio_duck_spark.sources.loopback import _try_cast_like_spark
+
+    vals = [
+        "2024-01-01T00:00:00+02:00", "20240101", "2024-1-1",
+        "2024", "2024-01", "2024-1", "2024-01-01", " 2024-01-01\t",
+        "\x7f2024-01-01", "2024-01-01\u00a0", "2024-01-01T", "2024-01-01 12",
+        "2024-01-01T12:3", "2024-01-01T1:2:3", "2024-01-01T12:30:45.",
+        "2024-01-01T12:30:45.123456789", "2024-01-01T12:30:45.5Z",
+        "2024-01-01 12:30:45 UTC", "2024-01-01T12:30:45UT",
+        "2024-01-01T12:30:45+1:00", "2024-01-01T12:30:45+01:0",
+        "2024-01-01T12:30:45+0100", "2024-01-01T12:30:45+01",
+        "2024-01-01T12:30:45-0", "2024-01-01T12:30:45-05:30",
+        "2024-01-01T12:30:45+01:00:30", "2024-01-01T12:30:45+18:00",
+        "2024-01-01T12:30:45+19:00", "2024-01-01T12:30:45GMT+2",
+        "2024-01-01T12:30:45UTC+01:00", "2024-01-01T12:30:45 Z",
+        "2024-01-01T12:30:45z", "2024-01-01T12:30Z",
+        "2024-01-01 12:30:45 Europe/Paris", "2024-03-10T02:30:00 America/New_York",
+        "2024-11-03T01:30:00 America/New_York", "2024-01-01T12:30:45 Mars/Base",
+        "2024-13-01", "2024-02-30", "2024-02-29", "2023-02-29",
+        "2024-01-01T24:00:00", "2024-01-01T12:60:00", "+2024-01-01",
+        "002024-01-01", "2024-001-01", "2024/01/01", "2024-01-01X",
+        "2024-01-01  12:00:00", "", " ", "9999-12-31T23:59:59.999999",
+    ]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, s string")
+    rows = df.selectExpr(
+        "i", "unix_micros(try_cast(s AS timestamp)) AS us"
+    ).orderBy("i").collect()
+    for r in rows:
+        got = _try_cast_like_spark(vals[r.i], "t")
+        want = None if r.us is None else (
+            dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=r.us))
+        assert got == want, (vals[r.i], got, want)
+
+
 def test_number_rule_matches_engine_casts(spark):
     """The one string -> number rule behind the SQL table function's -c
     casts, the fold's try_cast and the pushed filter's ANSI cast
@@ -819,7 +872,8 @@ def test_number_rule_matches_engine_casts(spark):
     engine's try_cast to int/bigint/float/double: Unicode digits and
     spaces, '_' separators, f/d suffixes, hex floats, the special
     literals, the integral-only DEL trim, range and float32 overflow.
-    The ANSI twin raises exactly where the engine's try_cast is NULL."""
+    The ANSI twin raises exactly where the engine's try_cast to the same
+    type (int, bigint, double) is NULL."""
     import math
 
     from fluvio_duck_spark.sources.loopback import (
@@ -849,11 +903,12 @@ def test_number_rule_matches_engine_casts(spark):
         v = vals[r[0]]
         for code, want in zip("ilfd", r[1:]):
             assert same(_try_cast_like_spark(v, code), want), (v, code, want)
-        if r[4] is None:
-            with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
-                _cast_like_spark(v, "double")
-        else:
-            assert same(_cast_like_spark(v, "double"), r[4]), v
+        for cast, want in (("int", r[1]), ("bigint", r[2]), ("double", r[4])):
+            if want is None:
+                with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
+                    _cast_like_spark(v, cast)
+            else:
+                assert same(_cast_like_spark(v, cast), want), (v, cast)
 
 
 def test_fold_pushdown_plans_one_task_per_partition(server):
