@@ -33,6 +33,7 @@ src/consume.rs:580-590.
 from __future__ import annotations
 
 import argparse
+import numbers
 import shlex
 from dataclasses import dataclass, field
 
@@ -99,21 +100,33 @@ class ConsumeOptions:
             return StartPosition("tail", self.tail)
         return StartPosition("end")
 
-    def window(self, leo, rows: bool = True) -> tuple[int, int | None]:
+    def window(self, leo, rows: bool = True) -> tuple:
         """The half-open ``[lo, hi)`` window these options select from one
         dense offset sequence (``hi`` None = unbounded): the start
         position gives ``lo``, ``--end`` (inclusive) and, when ``rows``,
         the ``--rows`` budget give ``hi``.  ``leo`` is the sequence's
         log-end offset, or a zero-argument callable returning it, called
-        only when the start anchors on the log end (``-T`` / default)."""
+        only when the start anchors on the log end (``-T`` / default).
+        The log end may also be a Column (a DataFrame builder's LEO
+        aggregate): the bounds anchored on it are then Columns too."""
         start = self.calculate_start()
         lo = start.n if start.kind in ("head", "start") else 0
+        least, greatest = min, max
         if start.kind in ("tail", "end"):
             end = leo() if callable(leo) else leo
-            lo = end if start.kind == "end" else max(end - start.n, 0)
+            if not isinstance(end, numbers.Integral):
+                from pyspark.sql import functions as F
+
+                def least(a, b):
+                    return F.least(F.lit(a), F.lit(b))
+
+                def greatest(a, b):
+                    return F.greatest(F.lit(a), F.lit(b))
+
+            lo = end if start.kind == "end" else greatest(end - start.n, 0)
         hi = None if self.end is None else self.end + 1
         if rows and self.rows is not None:
-            hi = lo + self.rows if hi is None else min(hi, lo + self.rows)
+            hi = lo + self.rows if hi is None else least(hi, lo + self.rows)
         return lo, hi
 
     @property

@@ -99,6 +99,15 @@ def _events_paths(sf_dir: str) -> tuple:
     return _tbl_paths(sf_dir, "events")
 
 
+def _task_granule(leos) -> str:
+    """``max_rows_per_batch`` for a fluvio stream drain, from the log end
+    of each cursor key (``leos``: a partition's LEO, or the stand-in's
+    one global LEO): about 4 executor-side range reads per cursor key
+    at every scale factor, floor 50 — a fixed granule makes the task
+    count grow linearly with the log."""
+    return str(max(50, -(-max(leos) // 4)))
+
+
 def q_stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = record_log_stream(spark, sf_dir)
     agg = tumbling_window_agg(stream, window="6 hours", watermark="12 hours")
@@ -622,20 +631,24 @@ def q_stream_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The topic as a Spark 4 Python STREAMING DataSource
     (``spark.readStream.format("fluvio")``): the full
     DataSourceStreamReader protocol — driver-side offset cursors, the
-    drain planned as 300-offset executor-side range reads (the sf0.001
-    log alone needs 4 tasks) — drained to the log end and compared
-    per-partition against the batch truth, the continuous-mode (-d)
-    twin of ``source_datasource_parity``."""
+    drain planned as granule-sized executor-side range reads (about 4
+    tasks at every scale factor, :func:`_task_granule`) — drained to
+    the log end and compared per-partition against the batch truth, the
+    continuous-mode (-d) twin of ``source_datasource_parity``."""
+    import os
+
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.sources.datasource import register_fluvio_source
+    from fluvio_duck_spark.sources.pplog import pp_footer_leo
 
     register_fluvio_source(spark)
+    leo = pp_footer_leo(os.path.join(sf_dir, "events.parquet"), "event_id")
     s = (
         spark.readStream.format("fluvio")
         .option("topic", "events")
         .option("sf_dir", sf_dir)
-        .option("max_rows_per_batch", "300")
+        .option("max_rows_per_batch", _task_granule([leo]))
         .load()
     )
     agg = s.groupBy("partition").agg(
@@ -1807,12 +1820,11 @@ def q_stream_pp_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame
 
     register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    max_leo = max(pp_partition_leos(log_dir).values())
-    batch = max(50, -(-max_leo // 4))  # ceil; ≥2 tasks/partition at sf0.001
     s = (
         spark.readStream.format("fluvio")
         .option("log_dir", log_dir)
-        .option("max_rows_per_batch", str(batch))
+        .option("max_rows_per_batch",
+                _task_granule(pp_partition_leos(log_dir).values()))
         .load()
     )
     agg = s.groupBy("partition").agg(
@@ -1857,12 +1869,11 @@ def q_stream_pp_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    max_leo = max(pp_partition_leos(log_dir).values())
-    batch = max(50, -(-max_leo // 4))  # ~4 executor tasks/partition at every sf
     s = (
         spark.readStream.format("fluvio")
         .option("log_dir", log_dir)
-        .option("max_rows_per_batch", str(batch))
+        .option("max_rows_per_batch",
+                _task_granule(pp_partition_leos(log_dir).values()))
         .load()
     )
     agg = (
@@ -1923,15 +1934,11 @@ def q_stream_pp_consume_opts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    # granule scaled to the log so the drain is ~4 executor tasks per
-    # partition at every sf (a fixed granule makes task count grow
-    # linearly with the log)
-    max_leo = max(pp_partition_leos(log_dir).values())
-    batch = max(40, -(-max_leo // 4))
     s = (
         spark.readStream.format("fluvio")
         .option("log_dir", log_dir)
-        .option("max_rows_per_batch", str(batch))
+        .option("max_rows_per_batch",
+                _task_granule(pp_partition_leos(log_dir).values()))
         .load()
     )
     out = fluvio_consume_stream(

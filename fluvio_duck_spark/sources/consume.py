@@ -19,14 +19,17 @@ but disabled, reference src/consume.rs:41,140-144).
 
 Offset semantics (reference ``calculate_offset``, src/consume.rs:580-605):
 a Fluvio partition log has dense offsets 0..LEO-1, so every position is an
-offset-range predicate — no sort, no shuffle, prunable at the scan:
+offset-range predicate — no sort, no shuffle, prunable at the scan.  The
+position table is ``options.py::ConsumeOptions.window``, the one rule
+every front end shares; it resolves the options to a half-open
+``[lo, hi)`` window:
 
-  -B            offset >= 0
-  -H n          offset >= n            (n past the beginning)
-  --start n     offset >= n
-  -T n          offset >= LEO - n      (last n records)
-  (default)     offset >= LEO          (Offset::end; empty in bounded mode)
-  --end n       offset <= n            (inclusive; the reference parses but
+  -B            lo = 0                 (no predicate)
+  -H n          lo = n                 (n past the beginning)
+  --start n     lo = n
+  -T n          lo = max(LEO - n, 0)   (last n records)
+  (default)     lo = LEO               (Offset::end; empty in bounded mode)
+  --end n       hi = n + 1             (inclusive; the reference parses but
                  never enforces this — SURVEY §1.4.4 — we enforce it)
 
 LEO (log-end offset) is computed as a 1-row aggregate joined back via
@@ -87,19 +90,16 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events
 
 
-def record_log(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, topic: str = "events"
-) -> DataFrame:
-    """The record-log DataFrame standing in for a Fluvio topic.
+def standin_records(events: DataFrame, topic: str) -> DataFrame:
+    """``events`` rows (a batch read or a stream) as topic records.
 
-    Maps the ``events`` fixture onto the reference record shape
+    Maps the fixture onto the reference record shape
     (``fluvio::consumer::Record`` — offset/timestamp/value, reference
     src/consume.rs:111-116,:289): ``event_id``→offset, ``ts``→timestamp,
     ``props``→value (JSON payload).  Topic = ``events`` for the whole log,
     or one of the ``event_type`` values for a sub-topic; partition stand-in
     is ``user_id % 4``.
     """
-    events = read_events(spark, sf_dir)
     if topic not in _WHOLE_LOG_TOPICS:
         events = events.filter(F.col("event_type") == topic)
     return events.select(
@@ -110,34 +110,42 @@ def record_log(
     )
 
 
-def _with_pp_offset_bounds(log: DataFrame, opts: ConsumeOptions) -> DataFrame:
-    """Per-partition offset algebra (reference src/partition.rs:107-134:
-    every partition log owns a dense 0..LEO_p-1 sequence, and offset
-    positions anchor against THAT partition's LEO, never a global
-    counter).  Tail/end resolve via a per-partition LEO aggregate
-    broadcast-joined back on the partition key — n_partitions rows, one
-    metadata-sized shuffle.  ``--rows`` budgets each partition's stream
-    independently (deterministic; the CLI's "stop after N merged
-    records" depends on arrival interleaving, which a deterministic
-    engine cannot honor — documented deviation)."""
-    from pyspark.sql import Window
+def record_log(
+    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, topic: str = "events"
+) -> DataFrame:
+    """The record-log DataFrame standing in for a Fluvio topic
+    (:func:`standin_records` over the ``events`` fixture)."""
+    return standin_records(read_events(spark, sf_dir), topic)
 
-    start = opts.calculate_start()
-    if start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    elif start.kind in ("tail", "end"):
-        lower = 0 if start.kind == "end" else start.n
-        leo_p = log.groupBy("partition").agg(
+
+def _offset_window(
+    log: DataFrame, opts: ConsumeOptions, rows: bool, per_partition: bool
+) -> DataFrame:
+    """Filter a record log to the ``[lo, hi)`` window of ``opts``
+    (``ConsumeOptions.window``; ``rows`` folds the ``--rows`` budget into
+    ``hi``).  A start anchored on the log end (-T / default) joins the
+    LEO aggregate back by broadcast and bounds on it: one row for the
+    global sequence, or one per partition when ``per_partition`` — each
+    partition log then owns its own dense 0..LEO_p-1 sequence and
+    anchors on THAT log end (reference src/partition.rs:107-134).  Any
+    other window is literal bounds, pushed to the parquet scan."""
+    keys = ["partition"] if per_partition else []
+    leo = []
+
+    def log_end():
+        leo.append(F.broadcast(log.groupBy(*keys).agg(
             (F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo")
-        )
-        log = (
-            log.join(F.broadcast(leo_p), "partition")
-            .filter(F.col("offset") >= F.col("__leo") - F.lit(lower))
-            .drop("__leo")
-        )
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
-    return log
+        )))
+        return F.col("__leo")
+
+    lo, hi = opts.window(log_end, rows=rows)
+    if leo:
+        log = log.join(leo[0], keys) if keys else log.crossJoin(leo[0])
+    if not (isinstance(lo, int) and lo == 0):  # offset >= 0 always holds
+        log = log.filter(F.col("offset") >= lo)
+    if hi is not None:
+        log = log.filter(F.col("offset") < hi)
+    return log.drop("__leo") if leo else log
 
 
 def _budget_order_cols(log: DataFrame) -> list[str]:
@@ -156,7 +164,9 @@ def _pp_row_budget(log: DataFrame, rows: int) -> DataFrame:
     """Per-partition ``--rows`` budget: the first ``rows`` records of
     each partition's stream (applied AFTER the transform chain, like the
     global fallback — a filtering transform changes what "first n"
-    matches)."""
+    matches).  Deterministic; the CLI's "stop after N merged records"
+    depends on arrival interleaving, which a deterministic engine cannot
+    honor — documented deviation."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("partition").orderBy(*_budget_order_cols(log))
@@ -165,25 +175,6 @@ def _pp_row_budget(log: DataFrame, rows: int) -> DataFrame:
         .filter(F.col("__rn") <= rows)
         .drop("__rn")
     )
-
-
-def _with_offset_bounds(log: DataFrame, opts: ConsumeOptions) -> DataFrame:
-    """Apply the offset algebra as pure predicates on ``offset``."""
-    start = opts.calculate_start()
-    if start.kind == "beginning":
-        pass  # offset >= 0 always holds
-    elif start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    elif start.kind in ("tail", "end"):
-        # LEO as a broadcast 1-row aggregate — no collect, single plan.
-        lower = 0 if start.kind == "end" else start.n
-        leo = log.agg((F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo"))
-        log = log.crossJoin(F.broadcast(leo)).filter(
-            F.col("offset") >= F.col("__leo") - F.lit(lower)
-        ).drop("__leo")
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
-    return log
 
 
 def fluvio_consume(
@@ -231,58 +222,29 @@ def fluvio_consume(
     # the SPU applies them before records reach the scan.
     chain = load_transform_chain(opts)
 
-    if per_partition_offsets:
-        log = _with_pp_offset_bounds(log, opts)
-        log = apply_transform_chain(log, chain)
-        if opts.rows is not None:
-            log = _pp_row_budget(log, opts.rows)
-        return project(log, opts.columns)
-
     # Row budget (--rows, reference src/consume.rs:75-93). Two plans:
     #  (a) offset-range predicate — when the selection is the dense whole
     #      log and the chain drops no rows, "first N records" ≡
-    #      "offset < start + N": a pure pushdown predicate, pruned at the
+    #      "offset < lo + N": a pure pushdown predicate, pruned at the
     #      parquet scan.  This is the scale path: no sort, no per-partition
     #      top-N heaps, no driver merge.
-    #  (b) ordered limit (TakeOrderedAndProject) — the general fallback
-    #      (sub-topic / single-partition selections have sparse offsets in
-    #      the stand-in; filtering transforms change the row count).
+    #  (b) ordered limit (TakeOrderedAndProject) after the chain — the
+    #      general fallback (sub-topic / single-partition selections have
+    #      sparse offsets in the stand-in; filtering transforms change the
+    #      row count); per-partition offsets budget each partition's own
+    #      stream instead (_pp_row_budget).
     budget_as_predicate = (
         opts.rows is not None
         and opts.topic in _WHOLE_LOG_TOPICS
         and opts.all_partitions
+        and not per_partition_offsets
         and all(spec.uses in _ROW_PRESERVING_TRANSFORMS for spec in chain)
     )
-    start = opts.calculate_start()
-    if budget_as_predicate and start.kind in ("beginning", "head", "start"):
-        lo = 0 if start.kind == "beginning" else start.n
-        log = log.filter(
-            (F.col("offset") >= lo) & (F.col("offset") < lo + opts.rows)
-        )
-        if opts.end is not None:
-            log = log.filter(F.col("offset") <= opts.end)
-        log = apply_transform_chain(log, chain)
-    elif budget_as_predicate and start.kind == "tail":
-        leo = log.agg((F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo"))
-        # Tail farther back than the log start clamps to the beginning
-        # (Fluvio Offset::from_end semantics) — without the clamp the
-        # [lo, lo+rows) window goes negative and matches nothing.
-        lo = F.greatest(F.col("__leo") - start.n, F.lit(0))
-        log = (
-            log.crossJoin(F.broadcast(leo))
-            .filter(
-                (F.col("offset") >= lo) & (F.col("offset") < lo + opts.rows)
-            )
-            .drop("__leo")
-        )
-        if opts.end is not None:
-            log = log.filter(F.col("offset") <= opts.end)
-        log = apply_transform_chain(log, chain)
-    else:
-        log = _with_offset_bounds(log, opts)
-        log = apply_transform_chain(log, chain)
-        if opts.rows is not None:
-            log = log.orderBy(*_budget_order_cols(log)).limit(opts.rows)
-            return project(log, opts.columns, parse_once=False)
-
-    return project(log, opts.columns)
+    log = _offset_window(log, opts, budget_as_predicate, per_partition_offsets)
+    log = apply_transform_chain(log, chain)
+    if opts.rows is None or budget_as_predicate:
+        return project(log, opts.columns)
+    if per_partition_offsets:
+        return project(_pp_row_budget(log, opts.rows), opts.columns)
+    log = log.orderBy(*_budget_order_cols(log)).limit(opts.rows)
+    return project(log, opts.columns, parse_once=False)

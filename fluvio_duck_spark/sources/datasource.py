@@ -347,8 +347,8 @@ class FluvioReader(_FluvioSource, DataSourceReader):
         arithmetic bounds only.  Sparse case (sub-topic or pinned
         partition): the tail anchor is the SELECTION's log-end — the max
         offset the selection owns, plus one — matching the builder,
-        which filters the log before applying the offset algebra
-        (sources/consume.py::_with_offset_bounds); likewise real Fluvio
+        which filters the log before applying the offset window
+        (sources/consume.py::_offset_window); likewise real Fluvio
         resolves -T against the chosen partition's LEO, not some global
         counter.  A sparse ``-A`` budget ends one past the rows-th
         smallest selected offset in the window; a pinned partition's

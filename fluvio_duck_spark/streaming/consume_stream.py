@@ -10,7 +10,8 @@ the log, then stop) — the exact analogue of the reference's default
 stop-at-end behavior, while leaving the same query runnable forever with a
 processing-time trigger.
 
-Streaming-specific semantics:
+Streaming-specific semantics (the position table is the batch one,
+``options.py::ConsumeOptions.window``):
 
 * ``-T/tail`` and the default end-position need the log-end offset, which
   is a property of a *bounded* scan — they raise here (the reference's
@@ -34,11 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from fluvio_duck_spark.mappings import project
 from fluvio_duck_spark.options import ConsumeOptError, ConsumeOptions, parse_consume_opts
-from fluvio_duck_spark.sources.consume import (
-    DEFAULT_SF_DIR,
-    STANDIN_PARTITIONS,
-    _WHOLE_LOG_TOPICS,
-)
+from fluvio_duck_spark.sources.consume import DEFAULT_SF_DIR, standin_records
 from fluvio_duck_spark.transforms import apply_transform_chain, load_transform_chain
 
 def _events_schema(spark: SparkSession, path: str):
@@ -91,42 +88,37 @@ def record_log_stream(
 ) -> DataFrame:
     """readStream over the events fixture, normalized to the record shape
     (offset, timestamp, partition, value) used by the batch source."""
-    events = event_stream(spark, sf_dir)
-    if topic not in _WHOLE_LOG_TOPICS:
-        events = events.filter(F.col("event_type") == topic)
-    return events.select(
-        F.col("event_id").cast(T.LongType()).alias("offset"),
-        F.col("ts").alias("timestamp"),
-        (F.col("user_id") % STANDIN_PARTITIONS).cast(T.IntegerType()).alias("partition"),
-        F.col("props").alias("value"),
-    )
+    return standin_records(event_stream(spark, sf_dir), topic)
 
 
 def fluvio_consume_stream(
     spark: SparkSession,
-    opts: str | ConsumeOptions,
+    opts: str | list[str] | ConsumeOptions,
     sf_dir: str = DEFAULT_SF_DIR,
     source: DataFrame | None = None,
 ) -> DataFrame:
-    """Streaming DataFrame with the consume pipeline applied.  Offset
-    positions that require the log end (tail / default-end) are batch-only."""
-    if isinstance(opts, str):
+    """Streaming DataFrame with the consume pipeline applied.  ``opts``
+    takes what ``fluvio_consume`` takes.  Offset positions that require
+    the log end (tail / default-end) are batch-only."""
+    if isinstance(opts, (str, list)):
         opts = parse_consume_opts(opts)
 
-    start = opts.calculate_start()
-    if start.kind in ("tail", "end"):
+    def unbounded():
+        kind = "tail" if opts.tail is not None else "end"
         raise ConsumeOptError(
-            f"offset position {start.kind!r} requires a bounded scan; "
+            f"offset position {kind!r} requires a bounded scan; "
             "use -B/-H/--start in streaming mode (or batch fluvio_consume)"
         )
+
+    lo, hi = opts.window(unbounded, rows=False)
 
     log = source if source is not None else record_log_stream(spark, sf_dir, opts.topic)
     if not opts.all_partitions:
         log = log.filter(F.col("partition") == opts.partition)
-    if start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
+    if lo > 0:
+        log = log.filter(F.col("offset") >= lo)
+    if hi is not None:
+        log = log.filter(F.col("offset") < hi)
 
     log = apply_transform_chain(log, load_transform_chain(opts))
     return project(log, opts.columns)

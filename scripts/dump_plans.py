@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TAG = sys.argv[1]
 SUFFIX = sys.argv[2]
@@ -32,7 +33,7 @@ def main() -> None:
     specs = all_queries()
     bench_dir = prep_bench_data(spark, SF_DIR)
 
-    out_dir = os.path.join("/root/repo/plans", TAG)
+    out_dir = os.path.join(REPO, "plans", TAG)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = specs[name].fn(spark, bench_dir)

@@ -21,7 +21,7 @@ import sys
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: Result types the driver's pandas canon mangles even when values are
 #: correct: DuckDB HUGEINT -> float64 ("3" -> "3.0" hash drift) and

@@ -223,15 +223,24 @@ def tiny_log(request):
     n=st.integers(min_value=0, max_value=60),
     end=st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
     rows=st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
+    keep_all=st.booleans(),
 )
-def test_consume_offsets_match_python_model(spark, tiny_log, pos, n, end, rows):
+def test_consume_offsets_match_python_model(
+    spark, tiny_log, pos, n, end, rows, keep_all
+):
     """Whatever combination of position/end/rows flags, the returned
     offset set must equal the pure-Python reference model: position
-    filter -> inclusive end -> take first `rows` in offset order."""
+    filter -> inclusive end -> take first `rows` in offset order.
+    ``keep_all`` adds a smartmodule that keeps every record: a filter
+    can drop rows, so the budget then plans as the ordered limit after
+    the chain instead of the offset-range predicate — both plans must
+    match the same model."""
     from fluvio_duck_spark.options import ConsumeOptError
     from fluvio_duck_spark.sources.consume import fluvio_consume
 
     argv = ["events", "-A"]
+    if keep_all:
+        argv += ["--sm", "sql-filter", "-e", "where=offset >= 0"]
     if pos == "-B":
         argv += ["-B"]
     elif pos in ("-H", "-T", "--start"):

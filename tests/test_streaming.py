@@ -82,6 +82,21 @@ def test_stream_rejects_tail_and_default_end(spark, sf_dir):
         fluvio_consume_stream(spark, "events -A", sf_dir=sf_dir)
 
 
+def test_stream_accepts_argv_list(spark, sf_dir):
+    """A pre-split argv list parses as in the batch builder."""
+    argv = ["events", "-A", "-H", "10", "--end", "209", "-c", "k:i=k"]
+    streamed = run_stream_to_table(
+        fluvio_consume_stream(spark, argv, sf_dir=sf_dir), spark
+    )
+    batch = fluvio_consume(spark, argv + ["--rows", "100000"], sf_dir=sf_dir)
+    assert sorted(r.k for r in streamed.collect()) == sorted(
+        r.k for r in batch.collect()
+    )
+    assert streamed.count() == 200
+    with pytest.raises(ConsumeOptError, match="bounded"):
+        fluvio_consume_stream(spark, ["events", "-A", "-T", "5"], sf_dir=sf_dir)
+
+
 def test_stream_is_streaming_plan(spark, sf_dir):
     df = fluvio_consume_stream(spark, "events -A -B", sf_dir=sf_dir)
     assert df.isStreaming
