@@ -38,7 +38,7 @@ import contextlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fluvio_duck_spark.queries import QuerySpec
+from fluvio_duck_spark.queries import QuerySpec, fluvio_stream
 from fluvio_duck_spark.queries.consume_queries import _PP_CTE
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -106,17 +106,9 @@ def _q_loopback_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fluvio_duck_spark.streaming.consume_stream import run_stream_to_table
 
     with _server(spark, sf_dir) as addr:
-        # granule scaled to the largest partition's RPC-probed LEO so
-        # the drain is ~4 fetches per partition at every sf (a fixed
-        # granule makes the RPC count grow linearly with the log —
-        # same sizing rule as the stream_pp_* family)
-        max_leo = max(server_parts(addr).values())
-        s = (
-            spark.readStream.format("fluvio")
-            .option("server", addr)
-            .option("max_rows_per_batch", str(max(500, -(-max_leo // 4))))
-            .load()
-        )
+        # granule from the RPC-probed LEOs: ~4 fetches per partition at
+        # every sf, the stream_pp_* family's sizing rule
+        s = fluvio_stream(spark, server_parts(addr).values(), server=addr)
         agg = s.groupBy("partition").agg(
             F.count("*").alias("n"),
             F.min("offset").alias("min_offset"),

@@ -25,7 +25,7 @@ from fluvio_duck_spark.functions.exact import dmul
 from fluvio_duck_spark.operators.dsir import hash_bucket, hash_bucket_sql
 from fluvio_duck_spark.operators.grouped import robust_scale_grouped
 from fluvio_duck_spark.operators.similarity import group_centroids
-from fluvio_duck_spark.queries import QuerySpec
+from fluvio_duck_spark.queries import QuerySpec, run_dir
 from fluvio_duck_spark.sources.tables import load
 
 _CDC_CUTOFF = "2024-01-22"
@@ -1469,16 +1469,8 @@ def q_source_csv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     original — the multi-format source surface a landed-topic engine
     needs.  Only exactly-serializable fields ride the trip (ints +
     strings); the oracle reads the pristine parquet."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_csv_parity",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("source_csv_parity", "work")
     ev.select("event_id", "user_id", "event_type").write.option(
         "header", True
     ).csv(work)
@@ -1512,18 +1504,10 @@ def q_sink_partitioned_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     type survives directory encoding, and no rows are dropped or doubled
     by the file-split knob.  At 100 TB this layout is what makes
     `WHERE priority = X` a partition-pruned scan."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.sinks import copy_to_parquet
 
     o = load(spark, sf_dir, "orders")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_sink_part",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("sink_partitioned_export", "work")
     copy_to_parquet(
         o.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
         work,
@@ -1557,18 +1541,10 @@ def q_sink_compacted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic-swap path, then read back and aggregated.  The hash match
     proves compaction is lossless; the file-count assertion inside the
     query (surfaced as a boolean) proves it actually compacted."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.sinks import compact_files, copy_to_parquet
 
     o = load(spark, sf_dir, "orders")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_sink_compact",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("sink_compacted_roundtrip", "work")
     copy_to_parquet(o.repartition(64), work)
     before = sum(f.endswith(".parquet") for f in os.listdir(work))
     compact_files(spark, work, target_bytes=256 * 1024 * 1024)
@@ -1605,19 +1581,11 @@ def q_sink_wds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-lossless (no member dropped, no byte mangled, no doc in the
     wrong shard).  Tars are unsplittable by design: the shard is the
     parallelism unit, exactly how training loaders consume them."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.dsir import hash_bucket
     from fluvio_duck_spark.sinks import read_wds_shards, write_wds_shards
 
     docs = load(spark, sf_dir, "documents")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_sink_wds",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("sink_wds_roundtrip", "work")
     write_wds_shards(docs, work, n_shards=8)
     back = read_wds_shards(spark, work)
     return back.groupBy("shard").agg(
@@ -1655,10 +1623,6 @@ def q_sink_wds_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     the JSON that actually round-tripped), and a missing-member count
     the oracle pins at zero.  Proves the sample-grouping contract, not
     just member survival."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.dsir import hash_bucket
     from fluvio_duck_spark.sinks import read_wds_shards, write_wds_shards
 
@@ -1671,11 +1635,7 @@ def q_sink_wds_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
             F.length("text").cast("int").alias("n_chars"),
         ).alias("meta"),
     )
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_sink_wds_mm",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("sink_wds_multimodal_roundtrip", "work")
     write_wds_shards(
         mm, work, n_shards=8,
         content_col="content", content_ext="img", meta_col="meta",
@@ -1751,16 +1711,8 @@ def q_source_jsonl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source twin of source_csv_parity: events round-trip
     through the re-consumable record form (sinks.py::copy_to_json
     mirrors it) and aggregate identically to the parquet original."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_jsonl_parity",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("source_jsonl_parity", "work")
     ev.select("event_id", "user_id", "event_type").write.json(work)
     back = (
         spark.read.schema("event_id long, user_id long, event_type string")
@@ -2011,16 +1963,8 @@ def q_source_orc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning — the same scan properties the parquet path gets).
     Full-fidelity round trip: ints, strings, AND the double value
     column survive ORC exactly, unlike text formats."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_orc_parity",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("source_orc_parity", "work")
     ev.select("event_id", "user_id", "event_type", "value").write.orc(work)
     back = spark.read.orc(work)
     return back.groupBy("event_type").agg(
@@ -2443,16 +2387,8 @@ def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract every long-lived landed-topic directory ends up needing.
     The aggregation proves column-level semantics: value stats must
     come from v2 rows alone, counts from both."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_schema_evo",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = run_dir("source_schema_evolution", "work")
     v1 = ev.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id")
     v2 = ev.filter(F.col("event_id") % 2 == 1).select(
         "event_id", "user_id", "value"
@@ -4939,24 +4875,14 @@ def q_layout_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     than bytes so both engines can reproduce it exactly; the byte form
     is the same window expression over a byte listing.
     """
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.layout import compaction_bins
     from fluvio_duck_spark.sinks import apply_compaction_plan
 
     ev = load(spark, sf_dir, "events").withColumn(
         "file_date", F.to_date("ts")
     )
-    # PID-keyed (ADVICE r11): an overlapping bench + verify run at the
-    # same scale must not rmtree the lake the other is mid-read on
-    work = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_compact_apply",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
+    work = run_dir("layout_compaction_apply", "work")
     src, out = os.path.join(work, "src"), os.path.join(work, "out")
-    shutil.rmtree(work, ignore_errors=True)
     # fragmented lake: one physical file per (event_type, file_date) —
     # repartition puts each leaf wholly in one task, partitionBy writes
     # one file per leaf directory per task.  Explicit N: a keyed
@@ -5224,10 +5150,6 @@ def q_layout_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the sidecar stays 16 bytes/file.  The
     pruned-plan-consults-the-sidecar-not-minmax half is pinned in
     test_layout.py by tampering a sidecar entry."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.skipping import (
         read_with_skipping,
         write_with_bloom_sidecar,
@@ -5239,11 +5161,7 @@ def q_layout_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") / _BLOOM_DOCS_PER_FILE).cast("long").alias("f"),
         F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(1000003)).alias("k"),
     )
-    lake = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_bloom_read",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(lake, ignore_errors=True)
+    lake = run_dir("layout_bloom_read", "lake")
     write_with_bloom_sidecar(base, lake, "f", "k")
     pruned, planned, total = read_with_skipping(spark, lake, _BLOOM_PROBE_KEY)
     probe = F.lit(_BLOOM_PROBE_KEY)
@@ -5314,10 +5232,6 @@ def q_text_index_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact membership predicate removes).  At 100 TB: index state is
     vocab-bounded, scan cost is slots_hit/63 of the table — the audit's
     scan_fraction, now actually bought."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.skipping import (
         read_with_token_skipping,
         write_with_token_index,
@@ -5329,11 +5243,7 @@ def q_text_index_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") / _BLOOM_DOCS_PER_FILE).cast("long").alias("f"),
         "text",
     )
-    lake = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_text_index_read",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(lake, ignore_errors=True)
+    lake = run_dir("text_index_read", "lake")
     write_with_token_index(base, lake, "f", "text")
     pruned, planned, total, slots = read_with_token_skipping(
         spark, lake, _TIDX_READ_PROBE
@@ -5506,21 +5416,13 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions only; the stats scan covers new files only) and
     the manifest stays catalog-sized.  Byte-stability of carried-over
     files is pinned in test_maintenance.py with mtime snapshots."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators import snapshots as snap
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id",
         F.pmod(F.col("event_id"), F.lit(_STT_PARTS)).alias("pt"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_snapshots",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir("snapshot_time_travel", "root")
 
     snap.create_table(spark, root, ev, "pt", _STT_COLS)
     appended = ev.filter(F.col("event_id") % 11 == 3).select(
@@ -5624,21 +5526,13 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently reconstructed states, so a hash match proves the
     pruned feed ≡ the unpruned one.  At 100 TB the CDC consumer's cost
     follows what the commits touched, not the table."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators import snapshots as snap
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id",
         F.pmod(F.col("event_id"), F.lit(_STT_PARTS)).alias("pt"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_snapshot_cdf",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir("snapshot_changes_feed", "root")
     snap.create_table(spark, root, ev, "pt", _STT_COLS)
     appended = ev.filter(F.col("event_id") % 11 == 3).select(
         (F.col("event_id") + _STT_APPEND_SHIFT).alias("event_id"),
@@ -5748,21 +5642,13 @@ def q_snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL reconstruction).  At 100 TB: pruning any snapshot of a
     billion-file table is driver-side set algebra over a catalog-sized
     manifest; the scan cost is the admitted-file count."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators import snapshots as snap
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id",
         F.pmod(F.col("event_id"), F.lit(_STT_PARTS)).alias("pt"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_snapshot_pruned",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir("snapshot_pruned_read", "root")
     snap.create_table(
         spark, root, ev, "pt", _STT_COLS, stats_col="event_id"
     )
@@ -5888,10 +5774,6 @@ def q_snapshot_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-column range predicates on every later read).  At 100 TB:
     OPTIMIZE cost is the rewritten partitions; history stays readable;
     the manifest stays catalog-sized."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators import snapshots as snap
     from fluvio_duck_spark.operators.layout import zorder_key as exact_key
 
@@ -5899,11 +5781,7 @@ def q_snapshot_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id",
         F.pmod(F.col("event_id"), F.lit(_STT_PARTS)).alias("pt"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_snapshot_optimize",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir("snapshot_optimize_zorder", "root")
     snap.create_table(spark, root, ev, "pt", _STT_COLS)
     appended = ev.filter(F.col("event_id") % 11 == 3).select(
         (F.col("event_id") + _STT_APPEND_SHIFT).alias("event_id"),
@@ -6037,21 +5915,13 @@ def q_snapshot_schema_evolution(
     metadata write and rewriting 100 TB: the alter commit costs one
     catalog-sized JSON, every historical snapshot stays readable with
     its own schema, and the backfill rides each later scan for free."""
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators import snapshots as snap
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id",
         F.pmod(F.col("event_id"), F.lit(_STT_PARTS)).alias("pt"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_schema_evo",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir("snapshot_schema_evolution", "root")
 
     snap.create_table(spark, root, ev, "pt", _STT_COLS)          # v1
     snap.alter_add_column(root, "score", "bigint")               # v2
@@ -6204,10 +6074,6 @@ def q_layout_zorder_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's bytes moved (the byte-stability half is pinned in
     test_layout.py with mtime snapshots).
     """
-    import os
-    import shutil
-    import tempfile
-
     from fluvio_duck_spark.operators.zorder import (
         refresh_zordered_partitioned,
         write_zordered_exact_partitioned,
@@ -6225,13 +6091,7 @@ def q_layout_zorder_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dom") > _ZR_SPLIT_DAY)
         & (F.col("event_type") == _ZR_DELTA_TYPE)
     ).drop("dom")
-    # PID-keyed (ADVICE r11): concurrent same-scale invocations must not
-    # delete/rewrite each other's lake mid-read
-    lake = os.path.join(
-        tempfile.gettempdir(), "fluvio_duck_zorder_refresh",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}",
-    )
-    shutil.rmtree(lake, ignore_errors=True)
+    lake = run_dir("layout_zorder_refresh", "lake")
     write_zordered_exact_partitioned(
         base, lake, "event_type", ["hb", "ub"], file_shift=_ZR_FILE_SHIFT
     )

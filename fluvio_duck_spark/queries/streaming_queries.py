@@ -6,19 +6,50 @@ harness can hash-compare them against ANSI oracles.
 Each entry exercises a *streaming* plan — file-stream source, watermarks,
 event-time windows, state-store folds — but over the same bounded fixture,
 which is exactly the reference's default consume mode (read to the end of
-the log, then stop; SURVEY §1.4.5)."""
+the log, then stop; SURVEY §1.4.5).
+
+Shared skeleton: fixture tables stream through
+``consume_stream.table_stream``, the fluvio cursor streams through
+``queries.fluvio_stream``, and every scratch path (sink, checkpoint, index,
+state) comes from ``queries.run_dir``.  The stateless scoring gates drain
+into a parquet sink through :func:`_drain_to_sink` (one
+``run_stream_to_parquet`` call, one read-back); the state-carrying drains
+(skyline, KMV, reservoir, incremental near-dup, snapshot commits) call
+``consume_stream.drain`` with their own ``foreachBatch`` function."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from fluvio_duck_spark.queries import QuerySpec
+from fluvio_duck_spark.functions.checksum import checksum_sql
+from fluvio_duck_spark.operators.dedup import (
+    minhash_portable_gate_incremental_oracle_sql,
+    minhash_portable_gate_oracle_sql,
+)
+from fluvio_duck_spark.queries import QuerySpec, fluvio_stream, run_dir
+from fluvio_duck_spark.queries.llm import (
+    ORACLE_CLASSIFIER_GATE,
+    ORACLE_DECONTAMINATE,
+    ORACLE_NOVELTY,
+    ORACLE_SAMPLE_RESERVOIR,
+    _oracle_dsir,
+    _oracle_dsir_select,
+)
 from fluvio_duck_spark.queries.relational import (
     ORACLE_ASOF,
     ORACLE_ROLLUP_HIST,
     ORACLE_ROLLUP_HOURLY,
 )
 from fluvio_duck_spark.queries.pipeline import ORACLE_CDC as ORACLE_STREAM_CDC
+from fluvio_duck_spark.queries.pipeline import (
+    ORACLE_ER_FUZZY,
+    ORACLE_PARETO_SKYLINE,
+    _KMV_K,
+    _KMV_M,
+    _oracle_kmv_distinct,
+)
 from fluvio_duck_spark.queries.relational import ORACLE_OHLC as ORACLE_STREAM_OHLC
 from fluvio_duck_spark.sources.consume import fluvio_consume
 from fluvio_duck_spark.streaming.consume_stream import (
@@ -26,7 +57,9 @@ from fluvio_duck_spark.streaming.consume_stream import (
     event_stream,
     fluvio_consume_stream,
     record_log_stream,
+    run_stream_to_parquet,
     run_stream_to_table,
+    table_stream,
 )
 from fluvio_duck_spark.streaming.stateful import aggregate_fold_stream
 from fluvio_duck_spark.streaming.windows import (
@@ -38,46 +71,11 @@ from fluvio_duck_spark.streaming.windows import (
 _DEFAULT_COLS = 'event_id AS "offset", ts AS "timestamp", props AS "value"'
 
 
-def _run_dir(name: str, kind: str) -> str:
-    """Scratch dir for a streaming run's sink/checkpoint/index.
-
-    Deterministic per (query, kind) under ONE per-process root: a re-run
-    (bench loops the same query) wipes and reuses its own dir instead of
-    leaking a fresh ``/tmp/<name>_<uuid>`` per invocation, and the root
-    is removed at interpreter exit — /tmp stays bounded across
-    bench/verify sessions (ADVICE r5).  Wiping at query start also keeps
-    the fresh-checkpoint contract: a reused checkpoint would mark the
-    source files committed and deliver ZERO batches on a re-run.  The
-    returned report DataFrames stay lazy scans over the current run's
-    dir — nothing is collected to the driver.
-
-    SINGLE-INVOCATION CONTRACT (ADVICE r6): the path is deterministic
-    per (name, kind) within a process, so two CONCURRENT invocations of
-    the same streaming query in one process (e.g. parallel test workers
-    sharing a session) would clobber each other's live checkpoint/sink.
-    The bench/verify/driver harnesses are all sequential; a future
-    parallel harness must add a per-call suffix here."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"fluvio_duck_stream_runs_{os.getpid()}"
-    )
-    if not os.path.isdir(root):
-        os.makedirs(root, exist_ok=True)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    path = os.path.join(root, f"{name}_{kind}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
-
-
 def q_stream_consume_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = fluvio_consume_stream(
         spark, "events -A -H 100 --end 699 -c k:i=k -c kd:d=k", sf_dir=sf_dir
     )
-    return run_stream_to_table(stream, spark, drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(stream, spark, drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STREAM_PARITY = """
@@ -89,30 +87,38 @@ FROM events WHERE event_id >= 100 AND event_id <= 699
 
 def _tbl_paths(sf_dir: str, name: str) -> tuple:
     """Drain-source byte-sizing paths for a fixture-table stream."""
-    import os
-
     return (os.path.join(sf_dir, f"{name}.parquet"),)
 
 
-def _events_paths(sf_dir: str) -> tuple:
-    """The drain-source byte-sizing paths for events-log streams."""
-    return _tbl_paths(sf_dir, "events")
+def _drain_to_sink(
+    stream: DataFrame, name: str, schema: str, per_batch, drain_paths
+) -> DataFrame:
+    """Drain ``stream`` through ``per_batch`` into the parquet sink
+    ``run_dir(name, "out")`` (checkpoint ``run_dir(name, "ckpt")``) and
+    return the accumulated rows as a lazy scan of ``schema`` — an empty
+    frame of ``schema`` when the stream had no batches.
 
-
-def _task_granule(leos) -> str:
-    """``max_rows_per_batch`` for a fluvio stream drain, from the log end
-    of each cursor key (``leos``: a partition's LEO, or the stand-in's
-    one global LEO): about 4 executor-side range reads per cursor key
-    at every scale factor, floor 50 — a fixed granule makes the task
-    count grow linearly with the log."""
-    return str(max(50, -(-max(leos) // 4)))
+    Each micro-batch's rows go to the sink, NOT a driver-side list
+    (VERDICT r3 #4): their volume scales with the stream, so
+    accumulating pandas frames on the driver caps at driver memory.  The
+    sink is append-only, so a batch replayed across retries lands twice:
+    callers dedupe on read."""
+    spark = stream.sparkSession
+    out = run_dir(name, "out")
+    run_stream_to_parquet(
+        stream, out, run_dir(name, "ckpt"),
+        per_batch=per_batch, drain_paths=drain_paths,
+    )
+    if not os.path.isdir(out):  # the stream had zero batches
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(out)
 
 
 def q_stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = record_log_stream(spark, sf_dir)
     agg = tumbling_window_agg(stream, window="6 hours", watermark="12 hours")
     return run_stream_to_table(
-        agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir)
+        agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events")
     )
 
 
@@ -132,7 +138,7 @@ def q_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = record_log_stream(spark, sf_dir)
     agg = tumbling_window_agg(stream, window="6 hours", slide="3 hours",
                               watermark="12 hours")
-    return run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_SLIDING = """
@@ -151,7 +157,7 @@ FROM w GROUP BY 1, 2
 def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = record_log_stream(spark, sf_dir)
     agg = session_window_agg(stream, gap="1 hour", watermark="2 hours", key_col="partition")
-    return run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_SESSION = """
@@ -176,7 +182,7 @@ FROM s GROUP BY p, sid
 def q_stream_stateful_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = record_log_stream(spark, sf_dir)
     folded = aggregate_fold_stream(stream, initial=0, json_field="k")
-    return run_stream_to_table(folded, spark, output_mode="update", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(folded, spark, output_mode="update", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STATEFUL_FOLD = """
@@ -198,7 +204,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object(F.col("value"), "$.k").try_cast("int"),
     )
     deduped = stream_dedup_keys(stream, ["k"], watermark="30 days")
-    return run_stream_to_table(deduped, spark, output_mode="append", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(deduped, spark, output_mode="append", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STREAM_DEDUP = """
@@ -259,7 +265,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "inner",
     ).select("click_id", "purchase_id")
-    return run_stream_to_table(joined, spark, output_mode="append", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(joined, spark, output_mode="append", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STREAM_STREAM_JOIN = """
@@ -279,14 +285,11 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     from fluvio_duck_spark.operators.dedup import band_buckets, minhash_signatures
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import (
-        document_stream,
-        stream_neardup_gate,
-    )
+    from fluvio_duck_spark.streaming.neardup import stream_neardup_gate
 
     corpus = load(spark, sf_dir, "documents")
     index = band_buckets(minhash_signatures(corpus))
-    gated = stream_neardup_gate(document_stream(spark, sf_dir), index)
+    gated = stream_neardup_gate(table_stream(spark, sf_dir, "documents"), index)
     return run_stream_to_table(
         gated, spark, output_mode="append",
         drain_paths=_tbl_paths(sf_dir, "documents"),
@@ -317,7 +320,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_above"))
     )
-    return run_stream_to_table(enriched, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(enriched, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STREAM_STATIC = """
@@ -398,7 +401,7 @@ def q_stream_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="12 hours",
     )
     return finalize_rollup(
-        run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir)), m
+        run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events")), m
     )
 
 
@@ -440,7 +443,7 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (dim.valid_to.isNull() | (clicks.ts < dim.valid_to)),
         "left",
     ).select("event_id", "user_id", "ts", "purchase_event", "purchase_value")
-    return run_stream_to_table(enriched, spark, output_mode="append", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(enriched, spark, output_mode="append", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 def q_stream_rollup_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,7 +465,7 @@ def q_stream_rollup_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="48 hours",
     )
     return finalize_rollup(
-        run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir)), m
+        run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events")), m
     )
 
 
@@ -480,7 +483,7 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by=["ts", "event_id"],
         payload=["ts", "event_type", "value"],
     )
-    return run_stream_to_table(compacted, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(compacted, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 from fluvio_duck_spark.queries.consume_queries import ORACLE_COMPACT  # noqa: E402
@@ -546,8 +549,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     one file per trigger, and foreachBatch-merged into a versioned
     state table.  Shares the batch oracle: the incrementally maintained
     state must hash-match the one-shot MERGE."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.sources.tables import load
@@ -565,19 +566,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "error", F.lit("delete"))
         .otherwise(F.lit("upsert")).alias("op"),
     )
-    # session-scoped workdir keyed by the sf dir: re-invocations replace
-    # it instead of leaking a fresh mkdtemp per run (feed + state +
-    # checkpoint are all rebuilt, so /tmp usage stays bounded)
-    import os
-    import shutil
-
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "fluvio_duck_stream_cdc",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
+    work = run_dir("stream_cdc_apply", "work")  # feed + state + checkpoint
     bounds = [("2024-01-22", "2024-01-25"), ("2024-01-25", "2024-01-28"),
               ("2024-01-28", "2024-02-01")]
     for i, (lo, hi) in enumerate(bounds):
@@ -616,7 +605,7 @@ def q_stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", "event_id", "value", ["event_type"],
         width_seconds=3600, sum_scale=2,
     )
-    return run_stream_to_table(bars, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(bars, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 QUERIES.update({
@@ -628,35 +617,25 @@ QUERIES.update({
 
 
 def q_stream_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The topic as a Spark 4 Python STREAMING DataSource
-    (``spark.readStream.format("fluvio")``): the full
+    """The topic as a Spark 4 Python STREAMING DataSource (the
+    ``fluvio`` stream format, ``queries.fluvio_stream``): the full
     DataSourceStreamReader protocol — driver-side offset cursors, the
     drain planned as granule-sized executor-side range reads (about 4
-    tasks at every scale factor, :func:`_task_granule`) — drained to
+    tasks at every scale factor) — drained to
     the log end and compared per-partition against the batch truth, the
     continuous-mode (-d) twin of ``source_datasource_parity``."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from fluvio_duck_spark.sources.datasource import register_fluvio_source
     from fluvio_duck_spark.sources.pplog import pp_footer_leo
 
-    register_fluvio_source(spark)
     leo = pp_footer_leo(os.path.join(sf_dir, "events.parquet"), "event_id")
-    s = (
-        spark.readStream.format("fluvio")
-        .option("topic", "events")
-        .option("sf_dir", sf_dir)
-        .option("max_rows_per_batch", _task_granule([leo]))
-        .load()
-    )
+    s = fluvio_stream(spark, [leo], topic="events", sf_dir=sf_dir)
     agg = s.groupBy("partition").agg(
         F.count("*").alias("n"),
         F.min("offset").alias("min_offset"),
         F.max("offset").alias("max_offset"),
     )
-    return run_stream_to_table(agg, spark, "complete", drain_paths=_events_paths(sf_dir))
+    return run_stream_to_table(agg, spark, "complete", drain_paths=_tbl_paths(sf_dir, "events"))
 
 
 ORACLE_STREAM_DATASOURCE = """
@@ -686,7 +665,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = record_log_stream(spark, sf_dir)
     out = ewma_stream(stream, alpha=0.2, json_field="k")
-    res = run_stream_to_table(out, spark, output_mode="update", drain_paths=_events_paths(sf_dir))
+    res = run_stream_to_table(out, spark, output_mode="update", drain_paths=_tbl_paths(sf_dir, "events"))
     return res.select(
         "partition", "n_records", F.round("ewma", 6).alias("ewma")
     )
@@ -724,7 +703,7 @@ def q_stream_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     s = ols_sufficient_stats(event_stream(spark, sf_dir))
-    return ols_finalize(run_stream_to_table(s, spark, output_mode="complete", drain_paths=_events_paths(sf_dir)))
+    return ols_finalize(run_stream_to_table(s, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events")))
 
 
 QUERIES.update({
@@ -760,15 +739,13 @@ def q_stream_audit_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_rows"),
         fold_sum(F.col("rc")).alias("checksum"),
     )
-    out = run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_events_paths(sf_dir))
+    out = run_stream_to_table(agg, spark, output_mode="complete", drain_paths=_tbl_paths(sf_dir, "events"))
     return out.select(
         F.lit("events").alias("table_name"), "n_rows", "checksum"
     )
 
 
 def _oracle_stream_checksum() -> str:
-    from fluvio_duck_spark.functions.checksum import checksum_sql
-
     return checksum_sql(
         "events", ["event_id", "event_type", "user_id"], label="events"
     )
@@ -792,24 +769,13 @@ def q_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable (skyline(A∪B) = skyline(skyline(A) ∪ skyline(B))), so the
     final state equals the batch skyline under any micro-batch slicing.
     Shares pareto_skyline's quadratic NOT EXISTS oracle."""
-    import os
-
     import pandas as pd
 
     from fluvio_duck_spark.operators.skyline import _sweep, skyline2d
 
-    path = os.path.join(sf_dir, "part.parquet")
-    schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "part.parquet")
-            .load(sf_dir)
-        )
-    stream = stream.select("p_partkey", "p_retailprice", "p_size")
+    stream = table_stream(spark, sf_dir, "part").select(
+        "p_partkey", "p_retailprice", "p_size"
+    )
 
     state: dict[str, pd.DataFrame] = {}
 
@@ -838,7 +804,7 @@ def q_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.foreachBatch(apply_batch)
         # fresh checkpoint per invocation: a reused location would mark
         # the files committed and deliver ZERO batches on a re-run
-        .option("checkpointLocation", _run_dir("skyline", "ckpt")),
+        .option("checkpointLocation", run_dir("skyline", "ckpt")),
         spark, _tbl_paths(sf_dir, "part"),
     )
     return spark.createDataFrame(
@@ -848,23 +814,10 @@ def q_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES.update({
     "stream_skyline": QuerySpec(
-        q_stream_skyline,
-        None,  # set below to share the batch oracle without import cycles
+        q_stream_skyline, ORACLE_PARETO_SKYLINE,  # shared with batch pareto_skyline
         doc="continuously-maintained Pareto frontier (mergeable skyline state; batch-equal under any slicing)",
     ),
 })
-
-
-def _wire_stream_skyline_oracle() -> None:
-    from fluvio_duck_spark.queries.pipeline import ORACLE_PARETO_SKYLINE
-
-    QUERIES["stream_skyline"] = QuerySpec(
-        q_stream_skyline, ORACLE_PARETO_SKYLINE,
-        doc=QUERIES["stream_skyline"].doc,
-    )
-
-
-_wire_stream_skyline_oracle()
 
 
 def q_stream_ivm_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,25 +832,12 @@ def q_stream_ivm_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are commutative).  Non-additive measures (min/max) need the
     affected-group recompute — that path is the batch ivm_delta_agg;
     this twin is the state a stream can carry alone."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.ivm import IvmMeasure, agg_state
     from fluvio_duck_spark.sources.tables import load
 
-    path = os.path.join(sf_dir, "orders.parquet")
-    schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "orders.parquet")
-            .load(sf_dir)
-        )
-    feed = stream.filter(
+    feed = table_stream(spark, sf_dir, "orders").filter(
         (F.col("o_orderkey") % 9 == 4) | (F.col("o_orderkey") % 9 == 2)
     ).select(
         "o_orderpriority",
@@ -965,29 +905,16 @@ def q_stream_er_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the part stream with the same deterministic one-char-drop
     corruption as the batch query, so the accumulated matches equal
     er_fuzzy_join_parts exactly — oracle shared."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.linkage import fuzzy_join
     from fluvio_duck_spark.sources.tables import load
 
-    path = os.path.join(sf_dir, "part.parquet")
-    schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "part.parquet")
-            .load(sf_dir)
-        )
     pos = (
         (F.length("p_name") + F.ascii(F.substring("p_name", 1, 1)))
         % F.length("p_name") + 1
     )
-    dirty_stream = stream.select(
+    dirty_stream = table_stream(spark, sf_dir, "part").select(
         F.concat(
             F.col("p_name").substr(F.lit(1), pos - 1),
             F.col("p_name").substr(pos + 1, F.length("p_name") - pos),
@@ -999,52 +926,25 @@ def q_stream_er_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # static side materialized once
     )
 
-    # Each micro-batch's matches go to a parquet sink, NOT a driver-side
-    # list (VERDICT r3 #4): match volume scales with the stream, so
-    # accumulating pandas frames on the driver caps at driver memory.
-    # The sink append is executor-side and unbounded; the final read-back
-    # is a lazy scan.
-    out_dir = _run_dir("er_gate", "out")
-
-    def match_batch(batch_df, _bid) -> None:
-        out = fuzzy_join(
+    def match_batch(batch_df):
+        return fuzzy_join(
             clean, batch_df.distinct(), "clean_name", "dirty_name",
             q=3, threshold=0.3,
         ).select("dirty_name", "clean_name", "jaccard")
-        out.write.mode("append").parquet(out_dir)
 
-    drain(
-        dirty_stream.writeStream.foreachBatch(match_batch)
-        .option("checkpointLocation", _run_dir("er_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "part"),
-    )
-    out_schema = "dirty_name string, clean_name string, jaccard double"
-    if not os.path.isdir(out_dir):  # stream had zero batches
-        return spark.createDataFrame([], out_schema)
-    # dropDuplicates: a record replayed across micro-batch retries must
-    # not double-count (the sink is append-only, so dedup on read).
-    return spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    return _drain_to_sink(
+        dirty_stream, "er_gate",
+        "dirty_name string, clean_name string, jaccard double",
+        match_batch, _tbl_paths(sf_dir, "part"),
+    ).dropDuplicates()
 
 
 QUERIES.update({
     "stream_er_gate": QuerySpec(
-        q_stream_er_gate,
-        None,  # wired to the batch oracle below (import at call time)
+        q_stream_er_gate, ORACLE_ER_FUZZY,  # shared with batch er_fuzzy_join_parts
         doc="streaming record-linkage gate: per-batch fuzzy join vs the static clean catalog (stateless)",
     ),
 })
-
-
-def _wire_stream_er_oracle() -> None:
-    from fluvio_duck_spark.queries.pipeline import ORACLE_ER_FUZZY
-
-    QUERIES["stream_er_gate"] = QuerySpec(
-        q_stream_er_gate, ORACLE_ER_FUZZY,
-        doc=QUERIES["stream_er_gate"].doc,
-    )
-
-
-_wire_stream_er_oracle()
 
 
 def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,45 +958,27 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch text_dsir_weights exactly, so the oracle is shared.
     This is the production topology for importance-weighted ingest: fit
     λ offline, gate the firehose with a broadcast table."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dsir import dsir_lambda, dsir_score
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     lam = dsir_lambda(
         load(spark, sf_dir, "documents"), F.col("lang") == "en"
     ).localCheckpoint(eager=True)  # the frozen model, materialized once
 
-    out_dir = _run_dir("dsir_gate", "out")
-
-    def score_batch(batch_df, _bid) -> None:
-        dsir_score(batch_df, lam).write.mode("append").parquet(out_dir)
-
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", _run_dir("dsir_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, n_grams int, dsir_logweight double"
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    return _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "dsir_gate",
+        "doc_id long, n_grams int, dsir_logweight double",
+        lambda batch_df: dsir_score(batch_df, lam),
+        _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates()
 
 
-def _wire_stream_dsir_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import _oracle_dsir
-
-    QUERIES["stream_dsir_gate"] = QuerySpec(
-        q_stream_dsir_gate, _oracle_dsir(),
-        doc="streaming DSIR gate: frozen 256-row λ broadcast, per-batch scoring, parquet-sink accumulation ≡ batch weights",
-    )
-
-
-_wire_stream_dsir_oracle()
+QUERIES["stream_dsir_gate"] = QuerySpec(
+    q_stream_dsir_gate, _oracle_dsir(),
+    doc="streaming DSIR gate: frozen 256-row λ broadcast, per-batch scoring, parquet-sink accumulation ≡ batch weights",
+)
 
 
 def q_stream_neardup_gate_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,13 +990,10 @@ def q_stream_neardup_gate_portable(spark: SparkSession, sf_dir: str) -> DataFram
     across batches (a doc's buckets live in its own batch); matches
     append to a parquet sink; the accumulated result equals the batch
     computation exactly, so the generated oracle replicates it."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dedup import minhash_portable_buckets
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     index = (
         minhash_portable_buckets(load(spark, sf_dir, "documents"))
@@ -1122,42 +1001,26 @@ def q_stream_neardup_gate_portable(spark: SparkSession, sf_dir: str) -> DataFram
         .localCheckpoint(eager=True)  # static corpus index, built once
     )
 
-    out_dir = _run_dir("ndgate", "out")
-
-    def gate_batch(batch_df, _bid) -> None:
-        hits = (
+    def gate_batch(batch_df):
+        return (
             minhash_portable_buckets(batch_df)
             .join(F.broadcast(index), ["band", "bh"])
             .filter(F.col("doc_id") != F.col("other"))
             .groupBy("doc_id")
             .agg(F.count_distinct("other").cast("int").alias("n_partners"))
         )
-        hits.write.mode("append").parquet(out_dir)
 
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("ndgate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, n_partners int"
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    return _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "ndgate",
+        "doc_id long, n_partners int",
+        gate_batch, _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates()
 
 
-def _wire_stream_neardup_portable_oracle() -> None:
-    from fluvio_duck_spark.operators.dedup import (
-        minhash_portable_gate_oracle_sql,
-    )
-
-    QUERIES["stream_neardup_gate_portable"] = QuerySpec(
-        q_stream_neardup_gate_portable, minhash_portable_gate_oracle_sql(),
-        doc="streaming near-dup gate on the portable MinHash chain: static bucket index broadcast, per-batch banding — oracle-paired",
-    )
-
-
-_wire_stream_neardup_portable_oracle()
+QUERIES["stream_neardup_gate_portable"] = QuerySpec(
+    q_stream_neardup_gate_portable, minhash_portable_gate_oracle_sql(),
+    doc="streaming near-dup gate on the portable MinHash chain: static bucket index broadcast, per-batch banding — oracle-paired",
+)
 
 
 def q_stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1171,46 +1034,31 @@ def q_stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     is shared.  Production topology: the gate writes the scored firehose
     continuously; the quota report is the cheap periodic reader — no
     cross-batch streaming state anywhere."""
-    import os
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.functions.text import token_count
     from fluvio_duck_spark.operators.dsir import dsir_lambda, dsir_score
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     lam = dsir_lambda(
         load(spark, sf_dir, "documents"), F.col("lang") == "en"
     ).localCheckpoint(eager=True)  # frozen model, fit once on the reference corpus
 
-    out_dir = _run_dir("dsir_sel", "out")
-
-    def score_batch(batch_df, _bid) -> None:
-        scored = dsir_score(batch_df, lam).join(
+    def score_batch(batch_df):
+        return dsir_score(batch_df, lam).join(
             batch_df.select(
                 "doc_id", "source", token_count("text").alias("n_tok")
             ),
             "doc_id",
         )
-        scored.write.mode("append").parquet(out_dir)
 
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", _run_dir("dsir_sel", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = (
+    acc = _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "dsir_sel",
         "doc_id long, n_grams int, dsir_logweight double, "
-        "source string, n_tok int"
-    )
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame(
-            [], "source string, n_kept int, token_budget bigint, mean_weight double"
-        )
-    acc = spark.read.schema(out_schema).parquet(out_dir).dropDuplicates(["doc_id"])
+        "source string, n_tok int",
+        score_batch, _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates(["doc_id"])
     kept = acc.withColumn(
         "rk",
         F.row_number().over(
@@ -1229,16 +1077,10 @@ def q_stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_dsir_select_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import _oracle_dsir_select
-
-    QUERIES["stream_dsir_select"] = QuerySpec(
-        q_stream_dsir_select, _oracle_dsir_select(),
-        doc="streaming DSIR selection: scored-sink accumulation + per-source top-10 quota report — oracle-shared with curate_dsir_select",
-    )
-
-
-_wire_stream_dsir_select_oracle()
+QUERIES["stream_dsir_select"] = QuerySpec(
+    q_stream_dsir_select, _oracle_dsir_select(),
+    doc="streaming DSIR selection: scored-sink accumulation + per-source top-10 quota report — oracle-shared with curate_dsir_select",
+)
 
 
 def q_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1251,13 +1093,10 @@ def q_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_decontaminate, so the oracle is shared.  The production
     topology for continuous ingest screening: freeze the eval grams,
     gate the firehose."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dedup import contamination_report
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     bench = (
         load(spark, sf_dir, "documents")
@@ -1265,36 +1104,20 @@ def q_stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # the frozen eval suite
     )
 
-    out_dir = _run_dir("decon_gate", "out")
-
-    def gate_batch(batch_df, _bid) -> None:
-        corpus = batch_df.filter(F.col("doc_id") % 97 != 0)
-        contamination_report(corpus, bench, k=3).write.mode("append").parquet(
-            out_dir
-        )
-
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("decon_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, n_shared_grams long"
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    return _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "decon_gate",
+        "doc_id long, n_shared_grams long",
+        lambda batch_df: contamination_report(
+            batch_df.filter(F.col("doc_id") % 97 != 0), bench, k=3
+        ),
+        _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates()
 
 
-def _wire_stream_decontaminate_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import ORACLE_DECONTAMINATE
-
-    QUERIES["stream_decontaminate_gate"] = QuerySpec(
-        q_stream_decontaminate_gate, ORACLE_DECONTAMINATE,
-        doc="streaming decontamination gate: frozen eval 3-gram broadcast, per-batch screening — oracle-shared with text_decontaminate",
-    )
-
-
-_wire_stream_decontaminate_oracle()
+QUERIES["stream_decontaminate_gate"] = QuerySpec(
+    q_stream_decontaminate_gate, ORACLE_DECONTAMINATE,
+    doc="streaming decontamination gate: frozen eval 3-gram broadcast, per-batch screening — oracle-shared with text_decontaminate",
+)
 
 
 #: Streaming bloom-gate geometry: reference = every 89th doc; m = 8192
@@ -1326,13 +1149,10 @@ def q_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_false_positives — the oracle rebuilds the identical bitset in SQL
     (md5-fold positions), so the driver hash covers FP behavior
     bit-for-bit."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dsir import hash_bucket
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     def positions(textcol):
         return [
@@ -1350,14 +1170,11 @@ def q_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # the frozen sketch
     )
 
-    out_dir = _run_dir("bloom_gate", "out")
-
-    def gate_batch(batch_df, _bid) -> None:
+    def gate_batch(batch_df):
         # the whole firehose flows through — including the leaked
         # reference docs themselves (how benchmark contamination
         # actually arrives); the gate must catch every one
-        stream = batch_df
-        exploded = stream.select(
+        exploded = batch_df.select(
             "doc_id",
             F.explode(F.array(*positions(F.col("text")))).alias("pos"),
         )
@@ -1366,28 +1183,21 @@ def q_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.count("*").alias("nhit"))
         )
-        (
-            stream.select("doc_id")
+        return (
+            batch_df.select("doc_id")
             .join(hits, "doc_id", "left")
             .select(
                 "doc_id",
                 (F.coalesce(F.col("nhit"), F.lit(0)) == _SBG_K)
                 .cast("int").alias("flagged"),
             )
-            .write.mode("append").parquet(out_dir)
         )
 
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("bloom_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, flagged int"
-    if not os.path.isdir(out_dir):
-        gated = spark.createDataFrame([], out_schema)
-    else:
-        gated = spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    gated = _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "bloom_gate",
+        "doc_id long, flagged int",
+        gate_batch, _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates()
     # exact-truth accounting (batch side): a true member is a stream doc
     # whose text equals some reference text — bloom FPs = flagged − true
     truth = (
@@ -1464,15 +1274,9 @@ def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained sink and equals the batch report, so the oracle is
     shared.  Integer-exact logit ⇒ no cross-engine or cross-batch float
     hazard anywhere."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from fluvio_duck_spark.streaming.neardup import document_stream
-
-    out_dir = _run_dir("clf_gate", "out")
-
-    def gate_batch(batch_df, _bid) -> None:
+    def gate_batch(batch_df):
         w = F.split(F.col("text"), " ")
         sw = F.size(
             F.filter(
@@ -1482,7 +1286,7 @@ def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        scored = batch_df.select(
+        return batch_df.select(
             "doc_id",
             "source",
             (
@@ -1492,24 +1296,12 @@ def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.lit(1500) * F.size(w)
             ).cast("long").alias("logit_ppm"),
         )
-        scored.write.mode("append").parquet(out_dir)
 
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("clf_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, source string, logit_ppm long"
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs int, n_kept int, keep_rate double, "
-            "logit_sum_ppm long",
-        )
-    acc = (
-        spark.read.schema(out_schema).parquet(out_dir).dropDuplicates(["doc_id"])
-    )
+    acc = _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "clf_gate",
+        "doc_id long, source string, logit_ppm long",
+        gate_batch, _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates(["doc_id"])
     kept = (F.col("logit_ppm") >= 0).cast("int")
     return acc.groupBy("source").agg(
         F.count("*").cast("int").alias("n_docs"),
@@ -1519,16 +1311,10 @@ def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_classifier_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import ORACLE_CLASSIFIER_GATE
-
-    QUERIES["stream_classifier_gate"] = QuerySpec(
-        q_stream_classifier_gate, ORACLE_CLASSIFIER_GATE,
-        doc="streaming quality-classifier gate: stateless per-batch integer-exact scoring — oracle-shared with curate_classifier_gate",
-    )
-
-
-_wire_stream_classifier_oracle()
+QUERIES["stream_classifier_gate"] = QuerySpec(
+    q_stream_classifier_gate, ORACLE_CLASSIFIER_GATE,
+    doc="streaming quality-classifier gate: stateless per-batch integer-exact scoring — oracle-shared with curate_classifier_gate",
+)
 
 
 def q_stream_novelty_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1541,13 +1327,10 @@ def q_stream_novelty_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is shared.  The ingest topology for 'how much new
     content is the firehose bringing': freeze the index nightly, score
     continuously."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dedup import _exploded_shingles
     from fluvio_duck_spark.sources.tables import load
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     corpus_sh = _exploded_shingles(
         load(spark, sf_dir, "documents"), "text", "doc_id", 3, None
@@ -1558,11 +1341,9 @@ def q_stream_novelty_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # the frozen first-owner index
     )
 
-    out_dir = _run_dir("novelty_gate", "out")
-
-    def gate_batch(batch_df, _bid) -> None:
+    def gate_batch(batch_df):
         sh = _exploded_shingles(batch_df, "text", "doc_id", 3, None)
-        scored = (
+        return (
             sh.join(F.broadcast(first), "s")
             .groupBy("doc_id")
             .agg(
@@ -1579,30 +1360,18 @@ def q_stream_novelty_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("novelty"),
             )
         )
-        scored.write.mode("append").parquet(out_dir)
 
-    drain(
-        document_stream(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("novelty_gate", "ckpt")),
-        spark, _tbl_paths(sf_dir, "documents"),
-    )
-    out_schema = "doc_id long, n_shingles int, n_novel int, novelty double"
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(out_dir).dropDuplicates()
+    return _drain_to_sink(
+        table_stream(spark, sf_dir, "documents"), "novelty_gate",
+        "doc_id long, n_shingles int, n_novel int, novelty double",
+        gate_batch, _tbl_paths(sf_dir, "documents"),
+    ).dropDuplicates()
 
 
-def _wire_stream_novelty_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import ORACLE_NOVELTY
-
-    QUERIES["stream_novelty_gate"] = QuerySpec(
-        q_stream_novelty_gate, ORACLE_NOVELTY,
-        doc="streaming novelty gate: frozen first-owner shingle index broadcast, per-batch scoring — oracle-shared with text_novelty_fraction",
-    )
-
-
-_wire_stream_novelty_oracle()
+QUERIES["stream_novelty_gate"] = QuerySpec(
+    q_stream_novelty_gate, ORACLE_NOVELTY,
+    doc="streaming novelty gate: frozen first-owner shingle index broadcast, per-batch scoring — oracle-shared with text_novelty_fraction",
+)
 
 
 def q_stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,15 +1394,12 @@ def q_stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ADVICE r5; the id-shuffled multi-file layout is a test).  State is
     a parquet-backed bucket table (never driver memory), exactly the
     shape a 100 TB deployment checkpoints."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dedup import minhash_portable_buckets
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
-    idx_dir = _run_dir("ndinc", "idx")
-    out_dir = _run_dir("ndinc", "out")
+    idx_dir = run_dir("ndinc", "idx")
+    out_dir = run_dir("ndinc", "out")
 
     def gate_batch(batch_df, _bid) -> None:
         bk = minhash_portable_buckets(batch_df).localCheckpoint(eager=True)
@@ -1663,9 +1429,9 @@ def q_stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         same_batch.write.mode("append").parquet(idx_dir)  # index grows
 
     drain(
-        document_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "documents")
         .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", _run_dir("ndinc", "ckpt")),
+        .option("checkpointLocation", run_dir("ndinc", "ckpt")),
         spark, _tbl_paths(sf_dir, "documents"),
     )
     out_schema = "doc_id long, other long"
@@ -1680,19 +1446,11 @@ def q_stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_neardup_incremental_oracle() -> None:
-    from fluvio_duck_spark.operators.dedup import (
-        minhash_portable_gate_incremental_oracle_sql,
-    )
-
-    QUERIES["stream_neardup_incremental"] = QuerySpec(
-        q_stream_neardup_incremental,
-        minhash_portable_gate_incremental_oracle_sql(),
-        doc="incremental streaming near-dup: LSH index grows with the stream (parquet-backed state); per-doc prior-duplicate counts, oracle = all-pairs restricted to earlier ids",
-    )
-
-
-_wire_stream_neardup_incremental_oracle()
+QUERIES["stream_neardup_incremental"] = QuerySpec(
+    q_stream_neardup_incremental,
+    minhash_portable_gate_incremental_oracle_sql(),
+    doc="incremental streaming near-dup: LSH index grows with the stream (parquet-backed state); per-doc prior-duplicate counts, oracle = all-pairs restricted to earlier ids",
+)
 
 
 def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1710,16 +1468,13 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per batch: distinct on (type, h), salted two-stage
     top-K (stage 1 bounds every window task at K per salt slice), <=
     |types|*K rows rewritten per trigger."""
-    import os
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.operators.dsir import hash_bucket
-    from fluvio_duck_spark.queries.pipeline import _KMV_K, _KMV_M
     from fluvio_duck_spark.sources.tables import load
 
-    state_dir = _run_dir("kmvstream", "state")
+    state_dir = run_dir("kmvstream", "state")
     st_schema = "event_type string, h long"
 
     def apply_batch(batch_df, _bid) -> None:
@@ -1747,8 +1502,8 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain(
         event_stream(spark, sf_dir)
         .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", _run_dir("kmvstream", "ckpt")),
-        spark, _events_paths(sf_dir),
+        .option("checkpointLocation", run_dir("kmvstream", "ckpt")),
+        spark, _tbl_paths(sf_dir, "events"),
     )
 
     state = spark.read.schema(st_schema).parquet(state_dir)
@@ -1781,23 +1536,17 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_kmv_oracle() -> None:
-    from fluvio_duck_spark.queries.pipeline import _oracle_kmv_distinct
-
-    QUERIES["stream_kmv_distinct"] = QuerySpec(
-        q_stream_kmv_distinct,
-        _oracle_kmv_distinct(),  # shared: stream-merged sketch == batch sketch
-        doc="continuously-maintained KMV distinct sketch (bounded parquet state, associative merge per batch) — shares the batch oracle",
-    )
-
-
-_wire_stream_kmv_oracle()
+QUERIES["stream_kmv_distinct"] = QuerySpec(
+    q_stream_kmv_distinct,
+    _oracle_kmv_distinct(),  # shared: stream-merged sketch == batch sketch
+    doc="continuously-maintained KMV distinct sketch (bounded parquet state, associative merge per batch) — shares the batch oracle",
+)
 
 
 def q_stream_pp_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-partition offset model through the STREAMING seam
-    (CONNECTOR.md §4): ``readStream.format("fluvio").option("log_dir",
-    ...)`` checkpoints one cursor per partition log (``{"0": off0,
+    (CONNECTOR.md §4): the ``fluvio`` stream format with a ``log_dir``
+    option checkpoints one cursor per partition log (``{"0": off0,
     ...}``), each micro-batch advances every partition by ≤
     max_rows_per_batch of ITS OWN offsets, and the drain must reproduce
     the batch truth per partition — n, offset span, and LEO all
@@ -1812,21 +1561,10 @@ def q_stream_pp_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     full DataSourceStreamReader protocol, no driver funnel)."""
     from pyspark.sql import functions as F
 
-    from fluvio_duck_spark.sources.datasource import register_fluvio_source
-    from fluvio_duck_spark.sources.pplog import (
-        pp_partition_leos,
-        write_pp_log_dir,
-    )
+    from fluvio_duck_spark.sources.pplog import pp_partition_leos, write_pp_log_dir
 
-    register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    s = (
-        spark.readStream.format("fluvio")
-        .option("log_dir", log_dir)
-        .option("max_rows_per_batch",
-                _task_granule(pp_partition_leos(log_dir).values()))
-        .load()
-    )
+    s = fluvio_stream(spark, pp_partition_leos(log_dir).values(), log_dir=log_dir)
     agg = s.groupBy("partition").agg(
         F.count("*").alias("n"),
         F.min("offset").alias("min_offset"),
@@ -1861,21 +1599,10 @@ def q_stream_pp_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition cursors shifts a window count."""
     from pyspark.sql import functions as F
 
-    from fluvio_duck_spark.sources.datasource import register_fluvio_source
-    from fluvio_duck_spark.sources.pplog import (
-        pp_partition_leos,
-        write_pp_log_dir,
-    )
+    from fluvio_duck_spark.sources.pplog import pp_partition_leos, write_pp_log_dir
 
-    register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    s = (
-        spark.readStream.format("fluvio")
-        .option("log_dir", log_dir)
-        .option("max_rows_per_batch",
-                _task_granule(pp_partition_leos(log_dir).values()))
-        .load()
-    )
+    s = fluvio_stream(spark, pp_partition_leos(log_dir).values(), log_dir=log_dir)
     agg = (
         s.withWatermark("timestamp", "12 hours")
         .groupBy(F.window("timestamp", "6 hours"), "partition")
@@ -1926,21 +1653,10 @@ def q_stream_pp_consume_opts(spark: SparkSession, sf_dir: str) -> DataFrame:
     log), not a global slice — the last front-end × partition-model
     cell: builder, DataSource, SQL text, and now the streaming option
     string all share one offset algebra."""
-    from fluvio_duck_spark.sources.datasource import register_fluvio_source
-    from fluvio_duck_spark.sources.pplog import (
-        pp_partition_leos,
-        write_pp_log_dir,
-    )
+    from fluvio_duck_spark.sources.pplog import pp_partition_leos, write_pp_log_dir
 
-    register_fluvio_source(spark)
     log_dir = write_pp_log_dir(spark, sf_dir)
-    s = (
-        spark.readStream.format("fluvio")
-        .option("log_dir", log_dir)
-        .option("max_rows_per_batch",
-                _task_granule(pp_partition_leos(log_dir).values()))
-        .load()
-    )
+    s = fluvio_stream(spark, pp_partition_leos(log_dir).values(), log_dir=log_dir)
     out = fluvio_consume_stream(
         spark, "events -p 2 --start 5 --end 60 -c kk:i=k -c kd:d=k",
         sf_dir=sf_dir, source=s,
@@ -1986,13 +1702,10 @@ def q_stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is BOUNDED at K rows regardless of stream length; per batch
     the merge costs one TakeOrderedAndProject over (batch ∪ K prior
     rows) — per-partition K-row heaps, no shuffle, no window."""
-    import os
-
     from fluvio_duck_spark.operators.sampling import global_sample, uniform_key
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
     k = 200
-    state_dir = _run_dir("reservoir", "state")
+    state_dir = run_dir("reservoir", "state")
     st_schema = "doc_id long, lang string, source string, n_chars bigint"
 
     def apply_batch(batch_df, _bid) -> None:
@@ -2006,9 +1719,9 @@ def q_stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state.write.mode("overwrite").parquet(state_dir)
 
     drain(
-        document_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "documents")
         .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", _run_dir("reservoir", "ckpt")),
+        .option("checkpointLocation", run_dir("reservoir", "ckpt")),
         spark, _tbl_paths(sf_dir, "documents"),
     )
     return spark.read.schema(st_schema).parquet(state_dir).select(
@@ -2016,19 +1729,13 @@ def q_stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_reservoir_oracle() -> None:
-    from fluvio_duck_spark.queries.llm import ORACLE_SAMPLE_RESERVOIR
-
-    QUERIES["stream_reservoir_sample"] = QuerySpec(
-        q_stream_reservoir_sample,
-        ORACLE_SAMPLE_RESERVOIR,  # shared: stream-merged reservoir == batch draw
-        doc="continuously-maintained global uniform k-reservoir (bounded "
-            "parquet state, associative top-K merge per batch) — shares the "
-            "batch draw's oracle",
-    )
-
-
-_wire_stream_reservoir_oracle()
+QUERIES["stream_reservoir_sample"] = QuerySpec(
+    q_stream_reservoir_sample,
+    ORACLE_SAMPLE_RESERVOIR,  # shared: stream-merged reservoir == batch draw
+    doc="continuously-maintained global uniform k-reservoir (bounded "
+        "parquet state, associative top-K merge per batch) — shares the "
+        "batch draw's oracle",
+)
 
 
 def q_stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2049,15 +1756,12 @@ def q_stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the driver hash goes red.  At 100 TB each commit costs its
     batch (stats scan over new files only); the audit loop is
     catalog-sized metadata plus one bounded read per version."""
-    import os
-
     from pyspark.sql import functions as F
 
     from fluvio_duck_spark.functions.checksum import fold_sum, row_checksum
     from fluvio_duck_spark.operators import snapshots as snap
-    from fluvio_duck_spark.streaming.neardup import document_stream
 
-    root = _run_dir("snapshot_commits", "table")
+    root = run_dir("snapshot_commits", "table")
     cols = ["doc_id", "n_chars", "pt"]
 
     def commit_batch(batch_df, _bid) -> None:
@@ -2075,9 +1779,9 @@ def q_stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
             snap.create_table(s, root, df, "pt", cols)
 
     drain(
-        document_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "documents")
         .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", _run_dir("snapshot_commits", "ckpt")),
+        .option("checkpointLocation", run_dir("snapshot_commits", "ckpt")),
         spark, _tbl_paths(sf_dir, "documents"),
     )
 
@@ -2102,24 +1806,18 @@ def q_stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_snapshot_oracle() -> None:
-    from fluvio_duck_spark.functions.checksum import checksum_sql
-
-    inner = checksum_sql(
-        "(SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, "
-        "doc_id % 4 AS pt FROM documents)",
-        ["doc_id", "n_chars", "pt"],
-        label="snapshots",
-    )
-    QUERIES["stream_snapshot_commits"] = QuerySpec(
-        q_stream_snapshot_commits,
-        f"SELECT n_rows, checksum, TRUE AS versions_consistent "
-        f"FROM ({inner})",
-        doc="streaming ingest as versioned commits (one append manifest "
-            "per micro-batch): final as-of read == the batch corpus "
-            "under ANY slicing, every intermediate version's manifest "
-            "audit re-proven against a physical as-of read",
-    )
-
-
-_wire_stream_snapshot_oracle()
+_SNAPSHOT_CHECKSUM = checksum_sql(
+    "(SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, "
+    "doc_id % 4 AS pt FROM documents)",
+    ["doc_id", "n_chars", "pt"],
+    label="snapshots",
+)
+QUERIES["stream_snapshot_commits"] = QuerySpec(
+    q_stream_snapshot_commits,
+    f"SELECT n_rows, checksum, TRUE AS versions_consistent "
+    f"FROM ({_SNAPSHOT_CHECKSUM})",
+    doc="streaming ingest as versioned commits (one append manifest "
+        "per micro-batch): final as-of read == the batch corpus "
+        "under ANY slicing, every intermediate version's manifest "
+        "audit re-proven against a physical as-of read",
+)

@@ -10,6 +10,11 @@ the log, then stop) — the exact analogue of the reference's default
 stop-at-end behavior, while leaving the same query runnable forever with a
 processing-time trigger.
 
+Fixture tables stream through :func:`table_stream` (one schema source, one
+file-vs-directory rule); every bounded drain runs through :func:`drain`, and
+the one file sink is :func:`run_stream_to_parquet` (foreachBatch → parquet,
+with an optional per-batch transform for the scoring gates).
+
 Streaming-specific semantics (the position table is the batch one,
 ``options.py::ConsumeOptions.window``):
 
@@ -38,41 +43,40 @@ from fluvio_duck_spark.options import ConsumeOptError, ConsumeOptions, parse_con
 from fluvio_duck_spark.sources.consume import DEFAULT_SF_DIR, standin_records
 from fluvio_duck_spark.transforms import apply_transform_chain, load_transform_chain
 
-def _events_schema(spark: SparkSession, path: str):
-    """The fixture's parquet schema from the shared per-(path, mtime)
-    metadata cache (sources/tables.py::table_schema) — the file-stream
-    source needs an explicit schema, and re-running footer inference on
-    every stream construction cost ~0.2 s × ~20 streaming queries."""
+
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """readStream over the fixture table ``name`` with the batch source's
+    schema, from the shared per-(path, mtime) metadata cache
+    (sources/tables.py::table_schema) — the file-stream source needs an
+    explicit schema, and re-running footer inference on every stream
+    construction cost ~0.2 s per streaming query.
+
+    Handles both layouts: a ``<name>.parquet/`` DIRECTORY of part-files
+    (any multi-file ingest, e.g. the sf1 cache) is streamed directly; a
+    single ``<name>.parquet`` file next to the other tables is selected
+    from ``sf_dir`` with ``pathGlobFilter``, which matches LEAF files
+    only — against a directory's children it silently matches nothing."""
     from fluvio_duck_spark.sources.tables import table_schema
 
-    return table_schema(spark, path)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark.readStream.schema(table_schema(spark, path)).format("parquet")
+    if os.path.isdir(path):
+        return reader.load(path)
+    return reader.option("pathGlobFilter", f"{name}.parquet").load(sf_dir)
 
 
 def event_stream(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """readStream over the events fixture with its native typed schema
     (event_id, ts, user_id, event_type, value, props).
 
-    File-stream sources require an explicit schema; it is derived from a
-    batch footer read of the same file so the stream sees exactly what the
-    batch source sees — including the ``ts`` flavor, which has shipped both
-    as TIMESTAMP(NANOS) (Spark reads it as long under the legacy conf and
-    we truncate ns→µs) and as plain TIMESTAMP(MICROS)."""
+    The schema is the batch footer's (:func:`table_stream`), so the
+    stream sees exactly what the batch source sees — including the
+    ``ts`` flavor, which has shipped both as TIMESTAMP(NANOS) (Spark
+    reads it as long under the legacy conf and we truncate ns→µs) and as
+    plain TIMESTAMP(MICROS)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = _events_schema(spark, path)
-    if os.path.isdir(path):
-        # multi-file table layout (e.g. bench.py's multi-row-group cache):
-        # the table IS a directory — stream it directly
-        stream = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        # single-file layout: file-stream sources take a directory, so load
-        # the sf dir and glob-select just the events table
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
+    stream = table_stream(spark, sf_dir, "events")
+    schema = stream.schema
     if isinstance(schema["ts"].dataType, T.LongType):
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
@@ -227,7 +231,14 @@ def run_stream_to_table(
     return out
 
 
-def run_stream_to_parquet(df: DataFrame, path: str, checkpoint: str) -> None:
+def run_stream_to_parquet(
+    df: DataFrame,
+    path: str,
+    checkpoint: str,
+    *,
+    per_batch=None,
+    drain_paths=(),
+) -> None:
     """foreachBatch → parquet sink (SURVEY §7 step 7): each micro-batch is
     written by the distributed batch writer, with the checkpoint making the
     pipeline restartable (exactly-once per batch id — a retried batch
@@ -236,14 +247,22 @@ def run_stream_to_parquet(df: DataFrame, path: str, checkpoint: str) -> None:
 
     foreachBatch rather than the native file sink so the batch writer's
     full surface (partitionBy, dynamic overwrite, bucketed tables, JDBC…)
-    is usable per micro-batch — the pattern any production sink needs."""
+    is usable per micro-batch — the pattern any production sink needs.
+
+    ``per_batch`` (a ``batch → DataFrame`` function; identity when None)
+    turns each micro-batch into the rows appended — a gate scoring every
+    batch against a frozen broadcast model.  ``drain_paths`` (source
+    files/dirs) opts the drain into the input-derived state-partition
+    count (see :func:`drain`)."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(path)
+        out = batch if per_batch is None else per_batch(batch)
+        out.write.mode("append").parquet(path)
 
     drain(
         df.writeStream.foreachBatch(write_batch).option(
             "checkpointLocation", checkpoint
         ),
         df.sparkSession,
+        drain_paths,
     )

@@ -24,47 +24,10 @@ batch-parity test.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from fluvio_duck_spark.operators.dedup import band_buckets, rowwise_minhash
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the documents fixture (the arriving-corpus
-    stand-in).  Handles both layouts: a single ``documents.parquet``
-    file next to the other tables (the driver fixtures — selected via
-    pathGlobFilter, which matches LEAF files) and a
-    ``documents.parquet/`` DIRECTORY of part-files (any real multi-file
-    ingest, e.g. the sf1 cache) — the glob filter silently matches
-    nothing against a directory's children, so that case loads the
-    directory itself."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(path):
-        return (
-            spark.readStream.schema(DOCUMENTS_SCHEMA)
-            .format("parquet")
-            .load(path)
-        )
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
 
 
 def stream_neardup_gate(

@@ -22,10 +22,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.1"
-SF1 = "/root/repo/.bench_data/sf1"
+SF1 = os.path.join(sys.path[0], ".bench_data", "sf1")
 
 DEFAULT = [
     "agg_pricing_summary", "join_revenue_by_nation", "join_asof",

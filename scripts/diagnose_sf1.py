@@ -15,9 +15,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF1_DIR = os.environ.get("SF1_DIR", "/root/repo/.bench_data/sf1")
+SF1_DIR = os.environ.get("SF1_DIR", os.path.join(sys.path[0], ".bench_data", "sf1"))
 LOG_DIR = "/tmp/spark-events-diag"
 
 

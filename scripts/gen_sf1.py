@@ -16,7 +16,7 @@ is synthesized by unioning 10 key-shifted replicas of sf0.1:
   bucket — what organic 10× growth looks like for an events table);
 * nation/region stay fixed (TPC-H dims don't scale).
 
-Output: /root/repo/.bench_data/sf1/<table>.parquet — 8 files per big
+Output: <checkout>/.bench_data/sf1/<table>.parquet — 8 files per big
 table so scans parallelize (same layout convention as the bench cache).
 Idempotent via an mtime-keyed marker.  ~7 M lineitem rows, ~1 M events.
 
@@ -29,10 +29,10 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.bench_data/sf1"
+DST = os.path.join(sys.path[0], ".bench_data", "sf1")
 REPLICAS = 10
 
 #: table -> list of (column, fk_family); families share one shift constant.

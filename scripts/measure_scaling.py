@@ -16,13 +16,13 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: sf label -> fixture dir.  sf1 is the locally-synthesized 10× decade
 #: (scripts/gen_sf1.py) — included when present so the scaling table can
 #: separate fixed per-job overhead from data cost (VERDICT r2 #8).
 SF_DIRS = [(sf, f"/root/testdata/sf{sf}") for sf in ("0.001", "0.01", "0.1")]
-_SF1 = "/root/repo/.bench_data/sf1"
+_SF1 = os.path.join(sys.path[0], ".bench_data", "sf1")
 if os.path.exists(os.path.join(_SF1, "_READY")):
     SF_DIRS.append(("1", _SF1))
 

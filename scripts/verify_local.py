@@ -80,9 +80,13 @@ def main() -> int:
     # whole gate under a different core/partition count proves every
     # oracle hash is partitioning-independent, not an artifact of one
     # fixed layout
+    # no console progress bar: it shares stderr/stdout with the OK/FAIL
+    # lines and glues them to a "[Stage ...]" line, so a line-anchored
+    # count (round_gate.sh) misses names
     spark = get_spark(
         "verify-local",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
     con = duckdb.connect()

@@ -163,19 +163,19 @@ def test_kmv_small_population_is_exact(spark):
 
 
 def test_streaming_run_dir_wipes_and_registers_cleanup():
-    """_run_dir must return the SAME path per (name, kind) within a
+    """run_dir must return the SAME path per (name, kind) within a
     process, wipe any prior contents (the fresh-checkpoint contract),
     and root everything under one per-process dir."""
     import os
 
-    from fluvio_duck_spark.queries.streaming_queries import _run_dir
+    from fluvio_duck_spark.queries import run_dir
 
-    p1 = _run_dir("t_unit", "out")
+    p1 = run_dir("t_unit", "out")
     os.makedirs(p1)
     marker = os.path.join(p1, "stale")
     open(marker, "w").write("x")
-    p2 = _run_dir("t_unit", "out")
+    p2 = run_dir("t_unit", "out")
     assert p1 == p2
     assert not os.path.exists(marker)  # wiped on re-request
-    assert f"fluvio_duck_stream_runs_{os.getpid()}" in p1
-    assert _run_dir("t_unit", "ckpt") != p1
+    assert f"fluvio_duck_runs_{os.getpid()}" in p1
+    assert run_dir("t_unit", "ckpt") != p1

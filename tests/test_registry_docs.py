@@ -115,7 +115,7 @@ def test_no_duplicate_query_registrations_in_source():
         os.path.join(_REPO, "fluvio_duck_spark", "queries", "*.py")
     ):
         names = re.findall(r'^\s*"([a-z0-9_]+)": QuerySpec', open(path).read(), re.M)
-        # streaming wiring assigns via QUERIES["name"] = QuerySpec too
+        # module-level registrations assign via QUERIES["name"] = QuerySpec too
         names += re.findall(
             r'^QUERIES\["([a-z0-9_]+)"\] = QuerySpec', open(path).read(), re.M
         )

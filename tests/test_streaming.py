@@ -157,6 +157,69 @@ def test_foreach_batch_parquet_sink_parity(spark, sf_dir, tmp_path):
     assert streamed == batch
 
 
+def test_drain_to_sink_zero_batches_returns_empty_frame(spark, tmp_path):
+    """A gate drained over an empty source runs no micro-batch: the sink
+    helper returns an empty frame of the declared schema and writes no
+    sink dir."""
+    import os
+
+    from fluvio_duck_spark.queries import run_dir
+    from fluvio_duck_spark.queries.streaming_queries import _drain_to_sink
+
+    src = tmp_path / "empty"
+    src.mkdir()
+    stream = spark.readStream.schema("doc_id long").parquet(str(src))
+    out = _drain_to_sink(
+        stream, "t_zero", "doc_id long, flagged int",
+        lambda batch: batch.withColumn("flagged", F.lit(1)), (),
+    )
+    assert out.schema.simpleString() == "struct<doc_id:bigint,flagged:int>"
+    assert out.count() == 0
+    root = os.path.dirname(run_dir("t_zero_probe", "x"))
+    assert not os.path.exists(os.path.join(root, "t_zero_out"))
+
+
+#: One pipeline scratch name and one sink-drain name, run in a process
+#: of their own under a private temp dir.
+_LEAK_SCRIPT = r"""
+import sys
+
+from fluvio_duck_spark.queries import all_queries
+from fluvio_duck_spark.session import get_spark
+
+spark = get_spark("scratch-leak", master="local[2]", shuffle_partitions=2)
+qs = all_queries()
+for name in ("source_csv_parity", "stream_dsir_gate"):
+    qs[name].fn(spark, sys.argv[1]).collect()
+"""
+
+
+def test_side_effecting_queries_leave_no_scratch_behind(sf_dir, tmp_path):
+    """Every scratch path a registry query writes lives under the
+    per-process ``run_dir`` root, removed at interpreter exit: after the
+    process ends, no ``fluvio_duck_*`` entry is left in its temp dir
+    (the pplog cache is shared across processes by design)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    proc = subprocess.run(
+        [sys.executable, "-c", _LEAK_SCRIPT, sf_dir],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "TMPDIR": str(tmp),
+             "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    left = sorted(
+        n for n in os.listdir(tmp)
+        if n.startswith("fluvio_duck_") and n != "fluvio_duck_pplog"
+    )
+    assert left == []
+
+
 def test_run_stream_to_table_drops_its_sink_view(spark, sf_dir):
     """Each drain's memory-sink view is dropped once its result is bound:
     repeated drains leave no ``stream_out_*`` view holding their rows
