@@ -45,10 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from fluvio_duck_spark.functions.checksum import (
-    CHECKSUM_MODULUS,
-    row_checksum,
-)
+from fluvio_duck_spark.functions.checksum import CHECKSUM_MODULUS, row_md5
 from fluvio_duck_spark.operators.groupwrite import (
     publish,
     write_file_per_group,
@@ -206,12 +203,12 @@ def _write_generation(
     """Write ``df`` one physical file per partition value into this
     version's generation directory and return the manifest entries.
 
-    The per-row pieces of every stat (the md5-fold checksum term and,
-    when the table declares a ``stats_col``, the two bloom hash
-    positions) are plain column expressions projected BEFORE the
-    partition exchange; each partition value's group then writes its
-    single file via pyarrow and returns its manifest stats row (rows +
-    checksum fold, plus min/max and the 126-bit bloom word pair) —
+    The per-row pieces of every stat (the checksum's md5 hex and, when
+    the table declares a ``stats_col``, the two bloom hash positions)
+    are plain column expressions projected BEFORE the partition
+    exchange; each partition value's group then writes its single file
+    via pyarrow and returns its manifest stats row (rows + checksum
+    fold, plus min/max and the 126-bit bloom word pair) —
     one job, one shuffle, zero read-back
     (:func:`~fluvio_duck_spark.operators.groupwrite.write_file_per_group`).
     Tasks write hidden attempt files; the driver publishes exactly the
@@ -221,9 +218,16 @@ def _write_generation(
     (the OPTIMIZE ZORDER path) via an in-group arrow sort on the
     projected key, NULL keys first like an ascending Spark sort.
 
-    The exact-sum chunking below keeps the checksum fold overflow-free
-    for any file under ~2.3e9 rows per 2^30-row slice (row fold ≤
-    3.9e9)."""
+    The checksum is split across the two runtimes: the md5 of each
+    row's canonical string runs in the JVM (``row_md5``, the same text
+    ``row_checksum`` embeds), and its weighted fold runs here in the
+    writer, one numpy product per Arrow chunk (``md5_fold_terms``).
+    On 4 vCPUs the JVM form of that fold costs 6.9 µs/row against 1.0
+    µs/row for the md5 alone; ``row_checksum`` keeps it only for the
+    pure-SQL audits, which have no Python worker
+    (``functions/checksum.py``).
+    The exact-sum chunking below keeps the fold overflow-free for any
+    file under ~2.3e9 rows per 2^30-row slice (row fold ≤ 3.9e9)."""
     gen_dir = os.path.join(root, "data", f"gen{version}")
     if os.path.exists(gen_dir):
         # parity with the former write.mode("errorifexists")
@@ -231,7 +235,7 @@ def _write_generation(
     os.makedirs(gen_dir)
     data_cols = list(df.columns)
     staged = df.withColumn(_PT, F.col(partition_col).cast("string"))
-    staged = staged.withColumn("__ck", row_checksum(audit_cols))
+    staged = staged.withColumn("__ck", row_md5(audit_cols))
     has_stats = stats_col is not None
     if has_stats:
         h1, h2 = bloom_hash_cols(F.col(stats_col).cast("long"))
@@ -254,6 +258,8 @@ def _write_generation(
 
         import numpy as np
 
+        from fluvio_duck_spark.functions.checksum import md5_fold_terms
+
         pv_raw = tbl.column(_PT)[0].as_py()
         # mirror Hive's null-partition sentinel (the old writer's
         # behavior via Spark's partitionBy)
@@ -266,7 +272,7 @@ def _write_generation(
         # exact checksum fold: per-row folds ≤ 3.9e9, so 2^30-row slices
         # sum below 2^63 in int64; the Python-int accumulator is exact
         # (the engine form's DECIMAL(38,0) discipline, same mod at end)
-        ck = tbl.column("__ck").to_numpy(zero_copy_only=False)
+        ck = md5_fold_terms(tbl.column("__ck"))
         fold = 0
         for i in range(0, rows, 1 << 30):
             fold += int(

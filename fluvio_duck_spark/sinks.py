@@ -339,11 +339,28 @@ def read_wds_shards(spark, out_dir: str) -> DataFrame:
     members into one row per sample (the webdataset grouping rule).
     Columns: shard, doc_id, n_bytes (text byte length), text, content
     (binary media member, NULL when absent), meta (JSON sidecar string,
-    NULL when absent)."""
+    NULL when absent).
+
+    ``out_dir`` is loaded as a directory with a ``*.tar`` leaf filter
+    (a ``*.tar`` path glob makes the file source probe for a
+    streaming-sink metadata log and log a WARN per read).  A directory
+    load lists subdirectories too, which the glob did not, so
+    ``out_dir`` must hold none: the writer makes none, and any other
+    one is refused."""
     import os
 
-    files = spark.read.format("binaryFile").load(
-        os.path.join(out_dir, "*.tar")
+    nested = sorted(
+        e.name for e in os.scandir(out_dir)
+        if e.is_dir() and not e.name.startswith((".", "_"))
+    )
+    if nested:
+        raise ValueError(
+            f"wds shard dir {out_dir} holds subdirectories: {nested}"
+        )
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tar")
+        .load(out_dir)
     )
     schema = ("shard int, doc_id long, n_bytes long, text string, "
               "content binary, meta string")

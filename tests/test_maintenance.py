@@ -246,6 +246,77 @@ def test_checksum_stays_in_bigint_range_at_any_cardinality(spark):
     assert want == expect
 
 
+def test_snapshot_writer_fold_matches_sql_folds_on_adversarial_rows(
+    spark, tmp_path
+):
+    """The snapshot writer folds each row's JVM md5 in its Arrow worker
+    (``md5_fold_terms``); the audits fold the same md5 in SQL.  Over
+    NULL, '', the delimiter, a backslash, a literal backslash-N,
+    non-ASCII text and negative ints, committed by create + append, the
+    manifest audit of each version equals the Spark SQL fold over the
+    version's rows and DuckDB's ``checksum_sql`` over the same rows."""
+    import duckdb
+
+    from fluvio_duck_spark.functions.checksum import (
+        checksum_sql,
+        table_checksum,
+    )
+    from fluvio_duck_spark.operators import snapshots as snap
+
+    cols = ["k", "s", "pt"]
+    first = [
+        (-1, None, 0), (0, "", 0), (-2**40, "|", 1), (7, "\\", 1),
+        (8, "\\N", 0), (9, "Ω-ünïcødé ✓", 1), (-10, "a|b\\|c", 0),
+    ]
+    second = [(-3, "\\N|\\", 1), (11, "日本語", 0), (12, None, 1)]
+    schema = "k long, s string, pt int"
+    root = str(tmp_path / "tbl")
+    snap.create_table(spark, root, spark.createDataFrame(first, schema),
+                      "pt", cols)
+    snap.append(spark, root, spark.createDataFrame(second, schema))
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k BIGINT, s VARCHAR, pt INTEGER)")
+    for v, rows in ((1, first), (2, first + second)):
+        con.execute("DELETE FROM t")
+        con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+        _label, d_rows, d_ck = con.execute(checksum_sql("t", cols)).fetchone()
+        got = table_checksum(
+            snap.read_version_as_of(spark, root, v), cols, "t"
+        ).first()
+        assert snap.manifest_audit(root, v) == (got.n_rows, got.checksum) \
+            == (d_rows, d_ck) == (len(rows), d_ck), v
+
+
+def test_md5_fold_terms_on_sliced_multichunk_arrow_matches_per_row():
+    """The writer's hex -> term helper reads each chunk's offsets and
+    data buffers directly: a sliced chunk (non-zero array offset) and a
+    large_string chunk must fold exactly like the per-row definition."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from fluvio_duck_spark.functions.checksum import (
+        _WEIGHTS,
+        md5_fold_terms,
+    )
+
+    hexes = [hashlib.md5(str(i).encode()).hexdigest() for i in range(50)]
+    arr = pa.chunked_array([
+        pa.array(hexes[:20]).slice(5, 10),
+        pa.array([], pa.string()),
+        pa.array(hexes[20:]).slice(3),
+    ])
+    want_hex = hexes[5:15] + hexes[23:]
+
+    def ref(h):
+        return sum(ord(c) * w for c, w in zip(h, _WEIGHTS))
+
+    assert md5_fold_terms(arr).tolist() == [ref(h) for h in want_hex]
+    large = pa.array(hexes, pa.large_string()).slice(7, 4)
+    assert md5_fold_terms(large).tolist() == [ref(h) for h in hexes[7:11]]
+
+
 def test_attribution_first_last_and_direct(spark, sf_dir):
     """Crafted journey: view -> click -> purchase credits first=view,
     last=click; a user whose first event is a purchase credits direct."""

@@ -492,3 +492,22 @@ def test_wds_multimodal_members_and_stale_shard_clearing(spark, tmp_path):
                      content_ext="img", meta_col="meta")
     assert sorted(os.listdir(out)) == ["shard-00000.tar", "shard-00001.tar"]
     assert read_wds_shards(spark, out).count() == 17  # no resurrected rows
+
+
+def test_wds_read_refuses_a_shard_dir_with_subdirectories(spark, tmp_path):
+    """read_wds_shards loads its directory with a ``*.tar`` leaf filter,
+    which lists subdirectories too: a nested directory of archives would
+    add rows, so it is refused rather than read."""
+    import os
+
+    import pytest
+
+    from fluvio_duck_spark.sinks import read_wds_shards, write_wds_shards
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
+    out = str(tmp_path / "wds")
+    write_wds_shards(df, out, n_shards=2)
+    assert read_wds_shards(spark, out).count() == 2
+    write_wds_shards(df, os.path.join(out, "nested"), n_shards=2)
+    with pytest.raises(ValueError, match="subdirectories"):
+        read_wds_shards(spark, out)
